@@ -130,13 +130,6 @@ object Bench {
     try {
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get("docs/BENCH_STAGES.txt"), sidecar.toString)
-      // per-run archive: stage evidence for EVERY run, timestamped, so a
-      // reviewer can line up any recorded bench JSON with its stage metrics
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("docs/BENCH_STAGES_ARCHIVE.txt"),
-        s"\n##### run ${java.time.Instant.now()} sf=$sfDir cpus=$cpus\n" + sidecar.toString,
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
     } catch { case _: Throwable => () } // bench result must not die on a doc write
     def jq(s: String): String = "\"" + s.flatMap {
       case '"' => "\\\""

@@ -41,6 +41,11 @@ object Exec {
   val StagingDirKey = "spark.graft.materialize.stagingDir"
   private val DefaultMaxLocalBytes: Long = 8L * 1024 * 1024 * 1024
 
+  /** Where [[materialize]]'s durable path stages its parquet directories. */
+  private def stagingRoot(spark: org.apache.spark.sql.SparkSession): String =
+    spark.conf.get(StagingDirKey,
+      s"${System.getProperty("java.io.tmpdir")}/graft-staging")
+
   /** Materialize `df` eagerly — blocking until the frame is computed —
     * and return a frame that re-reads the materialized rows instead of
     * re-running the plan. Column names, types, and order are preserved
@@ -54,9 +59,7 @@ object Exec {
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
     if (est <= BigInt(maxLocal)) df.localCheckpoint(true)
     else {
-      val root = spark.conf.get(StagingDirKey,
-        s"${System.getProperty("java.io.tmpdir")}/graft-staging")
-      val path = s"$root/${UUID.randomUUID()}"
+      val path = s"${stagingRoot(spark)}/${UUID.randomUUID()}"
       df.write.parquet(path)
       val p = new Path(path)
       p.getFileSystem(spark.sessionState.newHadoopConf()).deleteOnExit(p)
@@ -133,9 +136,7 @@ object Exec {
         // caller may be snapshotting against concurrent writes
         r.relation match {
           case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            val staging = new Path(h.sparkSession.conf.get(StagingDirKey,
-              s"${System.getProperty("java.io.tmpdir")}/graft-staging"))
-              .toUri.getPath
+            val staging = new Path(stagingRoot(h.sparkSession)).toUri.getPath
             h.location.rootPaths.nonEmpty &&
               h.location.rootPaths.forall(
                 _.toUri.getPath.startsWith(staging))

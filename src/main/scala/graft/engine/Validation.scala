@@ -83,10 +83,6 @@ object Validation {
   def regexViolations(df: DataFrame, column: String, pattern: String): DataFrame =
     df.filter(!col(column).rlike(pattern) || col(column).isNull)
 
-  /** Required-field check: rows with nulls in any required column. */
-  def requiredFieldViolations(df: DataFrame, required: Seq[String]): DataFrame =
-    Quality.anyNullRows(df, required)
-
   /** A14: before + appended == after. */
   def reconcile(before: Long, appended: Long, after: Long): Boolean =
     before + appended == after

@@ -108,12 +108,4 @@ object Drift {
         round((pNew - pOld) * log(pNew / pOld), 6).as("psi_term"))
       .orderBy((col("old_n") + col("new_n")).desc, col("value"))
   }
-
-  /** [[histogramDrift]] along the version axis of a published table:
-    * "what did last night's publish do to this column's distribution". */
-  def driftBetweenVersions(wh: graft.engine.Warehouse, table: String,
-                           oldVersion: String, newVersion: String,
-                           valueCol: String, bins: Int = 20): DataFrame =
-    histogramDrift(wh.readVersion(table, oldVersion),
-      wh.readVersion(table, newVersion), valueCol, bins)
 }

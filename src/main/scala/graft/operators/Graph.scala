@@ -224,12 +224,6 @@ object Graph {
     labels.select("node", "label")
   }
 
-  /** Shared edge/node preparation: dropped-null distinct edges with their
-    * out-degree riding beside each edge (so iterations never re-agg), and
-    * the endpoint node set — each materialized once. With `staging` the
-    * edge list lands in a bucketed-by-`src` layout instead of a plain
-    * materialize, making every iteration's `src` join exchange-free on
-    * the edge side. */
   /** k-round neighborhood feature propagation — exact integer message
     * passing, `h_k = (Aᵀ)ᵏ · h_0` over the distinct edge set: each round
     * replaces every node's value with the SUM of its in-neighbors'
@@ -272,6 +266,12 @@ object Graph {
     h
   }
 
+  /** Shared edge/node preparation: dropped-null distinct edges with their
+    * out-degree riding beside each edge (so iterations never re-agg), and
+    * the endpoint node set — each materialized once. With `staging` the
+    * edge list lands in a bucketed-by-`src` layout instead of a plain
+    * materialize, making every iteration's `src` join exchange-free on
+    * the edge side. */
   private def prepare(edges: DataFrame, srcCol: String, dstCol: String,
                       staging: Option[EdgeStage] = None)
       : (DataFrame, DataFrame) = {
@@ -292,8 +292,9 @@ object Graph {
   }
 
   /** The power-iteration core: `rank' = base(n) + damping · Σ inbound
-    * (rank div outdeg) div 1e6`, materializing each iterate so lineage
-    * depth stays constant. `based` carries `(node, __base)`. */
+    * (rank div outdeg) div 1e6`, materializing every
+    * [[MaterializeEvery]]-th iterate so lineage depth stays bounded.
+    * `based` carries `(node, __base)`. */
   private def iterate(ed: DataFrame, based: DataFrame, r0: DataFrame,
                       iters: Int, dampingPpm: Long): DataFrame = {
     require(iters >= 0, s"iteration count must be >= 0, got $iters")

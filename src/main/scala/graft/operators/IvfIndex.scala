@@ -4,6 +4,23 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.engine.{Exec, Warehouse}
 import graft.functions.{SignatureExpressions, VectorFunctions}
+import IndexAdvice.{DefaultMaxDeadFraction, DefaultMaxSkew,
+  DefaultMaxTombstoneBloat}
+
+/** IVF index health beyond the census stamp: per-cell (cell, live, dead)
+  * entry counts, sorted by cell, over the trained layout's `nlist`
+  * cells. Skew is LIVE occupancy of the hottest cell vs the live mean
+  * over the trained layout (live entries / nlist). */
+private[operators] final case class IvfHealth(cells: Seq[(Int, Long, Long)],
+    nlist: Long) extends IndexAdvice.Evidence {
+  val liveRows: Long = cells.map(_._2).sum
+  val deadRows: Long = cells.map(_._3).sum
+  val maxCell: Long = if (cells.isEmpty) 0L else cells.map(_._2).max
+  val skew: Double = {
+    val mean = if (nlist == 0L) 0.0 else liveRows.toDouble / nlist
+    if (mean == 0.0) 1.0 else maxCell / mean
+  }
+}
 
 /** Persistent IVF ANN index where the index IS a table layout.
   *
@@ -37,64 +54,19 @@ import graft.functions.{SignatureExpressions, VectorFunctions}
   * no service to run, and rebuild/vacuum follow ordinary warehouse
   * retention semantics.
   */
-object IvfIndex {
+object IvfIndex extends IndexAdvice.Tombstoned[IvfHealth]("id") {
 
-  private def fs(wh: Warehouse, p: org.apache.hadoop.fs.Path) =
-    p.getFileSystem(wh.spark.sessionState.newHadoopConf())
+  /** The generation frontier scans the entries themselves. */
+  override protected def frontierSource(wh: Warehouse,
+                                        name: String): DataFrame =
+    wh.read(name)
 
-  /** Census-stamped cache of the entry-generation frontier (the highest
-    * `seq` any current entry carries), keyed by table path: the scan
-    * stays the source of truth — a cache entry is served ONLY while the
-    * version dir's file census is byte-identical to the stamp, so any
-    * foreign mutation misses to a re-scan — but the mutation paths THIS
-    * driver runs know the frontier they just wrote and re-stamp it,
-    * turning the per-mutation frontier scan into a metadata listing
-    * (the healthCache discipline applied to `seq`). */
-  private val seqCache = new java.util.concurrent.ConcurrentHashMap[
-    String, ((Long, Long, Long), Long)]() // path -> (census stamp, maxSeq)
-
-  private def stampSeq(wh: Warehouse, name: String, maxSeq: Long): Unit = {
-    val c = IndexAdvice.census(wh, name)
-    seqCache.put(s"${wh.root}/$name", (c.stamp, maxSeq))
-  }
-
-  /** The next entry generation: one past the highest `seq` any current
-    * entry carries — derived from the index DATA itself (one
-    * column-pruned scan at maintenance time; a side counter file could
-    * drift after a crash, the data cannot), served from the
-    * census-stamped [[seqCache]] when nothing changed since this driver
-    * last wrote or scanned the frontier. */
-  private def nextSeq(wh: Warehouse, name: String): Long = {
-    val c = IndexAdvice.census(wh, name)
-    val key = s"${wh.root}/$name"
-    val hit = seqCache.get(key)
-    if (hit != null && hit._1 == c.stamp)
-      hit._2 + 1L
-    else {
-      val r = wh.read(name).agg(max(col("seq"))).head()
-      val m = if (r.isNullAt(0)) -1L else r.getLong(0)
-      seqCache.put(key, (c.stamp, m))
-      m + 1L
-    }
-  }
-
-  /** Drop tombstoned entries: an entry survives unless a `_deletes` row
-    * for its id carries a cut ABOVE its generation (`seq < cut` dies —
-    * the generation a [[reindex]]/[[reindexPq]] appends carries
-    * `seq == cut` and lives). Deletes are read from INSIDE the resolved
-    * version dir so a probe's snapshot consistency extends to them. */
-  private def liveOnly(wh: Warehouse, vdir: String, df: DataFrame,
-                       idAs: String): DataFrame = {
-    val dp = new org.apache.hadoop.fs.Path(s"$vdir/_deletes")
-    if (!fs(wh, dp).exists(dp)) df.drop("seq")
-    else {
-      val cuts = wh.spark.read.parquet(dp.toString)
-        .groupBy(col("id").as(idAs)).agg(max(col("cut")).as("__cut"))
-      df.join(graft.engine.JoinPolicy.broadcastIfSmall(cuts),
-          Seq(idAs), "left")
-        .filter(col("__cut").isNull || col("seq") >= col("__cut"))
-        .drop("__cut", "seq")
-    }
+  /** Reindex's existing-only gate: a column-pruned scan of the index's
+    * own id column (build/buildPq select the id first). */
+  override protected def existingIds(wh: Warehouse,
+                                     name: String): DataFrame = {
+    val idName = wh.read(name).columns.head
+    wh.read(name).select(col(idName).as("id"))
   }
 
   /** The probe-scoring join: pruned index entries × per-cell probe
@@ -145,84 +117,21 @@ object IvfIndex {
     deleteAt(wh, ids.select(col(idCol).as("id")), name,
       nextSeq(wh, name), onlyExisting = false)
 
-  /** Tombstone write at an already-resolved cut. With `onlyExisting`
-    * the id set first semi-joins against the index's own id column (a
-    * column-pruned entry scan — the cost class `nextSeq` already pays
-    * per maintenance call) and skips the write when nothing survives:
-    * a reindex stream of mostly-NEW vectors then grows no `_deletes`
-    * at all, instead of one useless tombstone file-pair per micro-batch
-    * that every future probe's cuts join would pay for. */
-  private def deleteAt(wh: Warehouse, ids: DataFrame, name: String,
-                       cut: Long, onlyExisting: Boolean): Unit = {
-    val base = ids.distinct()
-    // the tombstone count rides the pinning job (Observation) — no
-    // separate count() job per mutation
-    val (toTomb, n) = Exec.materializeCounted(
-      if (!onlyExisting) base
-      else {
-        val idName = wh.read(name).columns.head
-        base.join(wh.read(name).select(col(idName).as("id")), Seq("id"),
-          "left_semi")
-      })
-    // size-aware file-in (see TextIndex.deleteAt): small batches land
-    // as one file-pair, corpus-shaped delete sets keep bounded
-    // multi-task writers
-    if (n > 0L) {
-      // capture health + the newly-dead per-cell counts BEFORE the
-      // tombstone write: the delta must count entries live under the
-      // CURRENT cuts (the new cut would make them all read dead), and
-      // the capture's census stamp must predate the file change. The
-      // delta scan is column-pruned (id, cell, seq) — the cost class
-      // the onlyExisting gate already pays — and runs only while
-      // stored health is fresh enough to fold into AND the batch is
-      // big enough to earn it: a fold must never cost more scans than
-      // it saves, and a re-embed-heavy STREAM of micro-batches each
-      // under 1/10000 of the index would otherwise pay an index-column
-      // scan PER BATCH where the stale-stamp path pays one re-measure
-      // per advice consultation — tiny batches stale the stamp instead
-      // (exactly the pre-fold behavior).
-      val pre = freshCells(wh, name).filter { cells =>
-        val total = cells.map(c => c._2 + c._3).sum
-        // ceil division, not the multiplied form: `n * ratio >= total`
-        // overflows Long past ~9.2e14 tombstoned ids and silently flips
-        // the comparison, and the truncated `n >= total / ratio` rounds
-        // the gate DOWN (a 9999-entry index would fold on every 1-row
-        // delete). Rounding total/ratio UP keeps the documented
-        // semantics at any scale.
-        n >= (total + MinDeleteFoldRatio - 1) / MinDeleteFoldRatio
-      }
-      val deadDelta = pre.map { _ =>
-        val idName = wh.read(name).columns.head
-        liveOnly(wh, wh.dataPath(name),
-            wh.read(name).select(col(idName).as("id"), col("cell"),
-              col("seq")), "id")
-          .join(toTomb, Seq("id"), "left_semi")
-          .groupBy(col("cell")).agg(count(lit(1)).as("n")).collect()
-          .map(r => r.getInt(0) -> r.getLong(1)).toMap
-      }
-      // validate the cached frontier against the PRE-write census: a
-      // foreign write landing between the caller's nextSeq() and here
-      // would otherwise be absorbed under the fresh post-write census
-      // with a stale maxSeq (and a too-low frontier makes a later
-      // delete cut miss newer generations). On mismatch the cache
-      // entry drops and the next nextSeq re-scans. Single-writer
-      // remains the documented contract; this closes the window a
-      // cooperating-but-interleaved second maintainer would hit.
-      val preWrite = IndexAdvice.census(wh, name)
-      toTomb.withColumn("cut", lit(cut))
-        .repartition(IndexAdvice.companionShards(n))
-        .write.mode(org.apache.spark.sql.SaveMode.Append)
-        .parquet(s"${wh.dataPath(name)}/_deletes")
-      pre.foreach(cells =>
-        foldHealth(wh, name, cells, Map.empty, deadDelta.get))
-      // the tombstone write moved the census but not the entry frontier
-      // — re-stamp a cached value so the next nextSeq stays job-free
-      val key = s"${wh.root}/$name"
-      val prev = seqCache.get(key)
-      if (prev != null && prev._1 == preWrite.stamp)
-        stampSeq(wh, name, prev._2)
-      else if (prev != null) seqCache.remove(key)
-    }
+  /** A delete's health fold: the tombstoned ids' live entries move to
+    * their cells' dead counts — a column-pruned (id, cell, seq) scan,
+    * the cost class the onlyExisting gate already pays, which is why
+    * [[deleteAt]] size-gates it. */
+  override protected def foldDeletes(wh: Warehouse, name: String,
+                                     pre: IvfHealth,
+                                     tomb: DataFrame): IvfHealth = {
+    val idName = wh.read(name).columns.head
+    val dead = liveOnly(wh, wh.dataPath(name),
+        wh.read(name).select(col(idName).as("id"), col("cell"),
+          col("seq")))
+      .join(tomb, Seq("id"), "left_semi")
+      .groupBy(col("cell")).agg(count(lit(1)).as("n")).collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    foldCells(wh, name, pre, Map.empty, dead)
   }
 
   /** Re-embed CHANGED ids in a plain IVF index: tombstone + [[append]]
@@ -292,7 +201,7 @@ object IvfIndex {
                        maintainEvery: Int = 0,
                        maxDeadFraction: Double = DefaultMaxDeadFraction,
                        maxTombstoneBloat: Double = DefaultMaxTombstoneBloat,
-                       maxCellSkew: Double = DefaultMaxCellSkew)
+                       maxCellSkew: Double = DefaultMaxSkew)
       : org.apache.spark.sql.streaming.StreamingQuery =
     vectors.writeStream
       .option("checkpointLocation", checkpoint)
@@ -337,10 +246,13 @@ object IvfIndex {
     // the per-cell evidence folds at pure metadata cost (live counts
     // unchanged, dead mass zero, no `_deletes`) — a maintain() that
     // fires Compact therefore leaves the NEW version's health fresh too
-    val pre = freshCells(wh, name)
+    val pre = freshEvidence(wh, name)
     // same writer-side cell clustering as build/buildPq: the rewrite is
     // the moment to fix file counts, not inherit them
-    val live = liveOnly(wh, vdir, df, idName).withColumn("seq", lit(0L))
+    // seq re-added LAST, so the published `_partitioning` schema keeps
+    // its column order
+    val live = liveOnly(wh, vdir, df, idName).drop("seq")
+      .withColumn("seq", lit(0L))
       .repartition(IndexAdvice.shufflePartitions(wh), col("cell"))
     val out = wh.publish(live, name, partitionCols = Seq("cell"),
       beforeSwap = newVdir =>
@@ -354,9 +266,9 @@ object IvfIndex {
               fs(wh, src), new org.apache.hadoop.fs.Path(s"$newVdir/$art"),
               false, wh.spark.sessionState.newHadoopConf())
         })
-    pre.foreach(cells => foldHealth(wh, name,
-      cells.collect { case (cl, l, _) if l > 0L => (cl, l, 0L) },
-      Map.empty, Map.empty))
+    pre.foreach(e => persistHealth(wh, name,
+      IvfHealth(e.cells.collect { case (cl, l, _) if l > 0L => (cl, l, 0L) },
+        nlistOf(wh, name)), IndexAdvice.census(wh, name)))
     stampSeq(wh, name, 0L) // compaction resets every generation to 0
     out
   }
@@ -474,27 +386,9 @@ object IvfIndex {
       // cell-cluster each batch so it adds ≤ |touched cells| files, not
       // tasks × cells
       .repartition(IndexAdvice.shufflePartitions(wh), col("cell"))
-    appendFolding(wh, assigned, name)
+    appendFolding(wh, name, freshEvidence(wh, name), assigned, "cell")(
+      (e, delta) => foldCells(wh, name, e, delta, Map.empty))
     stampSeq(wh, name, seq) // this driver KNOWS the new frontier
-  }
-
-  /** The write half of [[appendAt]]/[[appendPqAt]]: land the assigned
-    * batch and, when stored health evidence is FRESH, fold the batch's
-    * per-cell live counts into it ([[foldHealth]]) so the append costs
-    * health its batch-sized aggregate, not the staleness that forces
-    * the next [[maintenanceAdvice]] into an entry re-scan. The batch is
-    * pinned only when a fold will consume it twice (write + count). */
-  private def appendFolding(wh: Warehouse, assigned: DataFrame,
-                            name: String): Unit = {
-    val pre = freshCells(wh, name)
-    val batch = if (pre.isDefined) Exec.materialize(assigned) else assigned
-    wh.append(batch, name)
-    pre.foreach { cells =>
-      val delta = batch.groupBy(col("cell"))
-        .agg(count(lit(1)).as("n")).collect()
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap
-      foldHealth(wh, name, cells, delta, Map.empty)
-    }
   }
 
   /** Persistent IVF+PQ index: the published layout holds 12-byte-scale
@@ -663,7 +557,8 @@ object IvfIndex {
         col("enc.cell").as("cell") :+ col("enc.code").as("code"): _*)
       .withColumn("seq", lit(seq))
       .repartition(IndexAdvice.shufflePartitions(wh), col("cell")) // batch cell clustering (see appendAt)
-    appendFolding(wh, enc, name)
+    appendFolding(wh, name, freshEvidence(wh, name), enc, "cell")(
+      (e, delta) => foldCells(wh, name, e, delta, Map.empty))
     stampSeq(wh, name, seq) // this driver KNOWS the new frontier
   }
 
@@ -720,8 +615,7 @@ object IvfIndex {
       s"rerank=$rerank must be >= k=$k (or 0 for automatic sizing)")
     if (rerank > 0) rerank
     else {
-      val live = freshSnapshot(wh, name, IndexAdvice.census(wh, name))
-        .map(_.summary._1)
+      val live = freshEvidence(wh, name).map(_.liveRows)
         .getOrElse(wh.read(name).count())
       // BigInt product: live × nprobe overflows Long within the corpus
       // scales this sizes for; the quotient is ≤ live, so the narrowing
@@ -1019,35 +913,6 @@ object IvfIndex {
     Similarity.rankTopK(rer, k)
   }
 
-  /** A delete's health fold runs only when the tombstone batch is at
-    * least 1/this of the index's entries — below that, the fold's
-    * column-pruned delta scan per call costs more than the single
-    * re-measure the stale stamp defers to (see deleteAt). */
-  val MinDeleteFoldRatio = 10000L
-
-  /** Compaction trigger: compact when at least this fraction of index
-    * entries are tombstone-dead (dead entries still occupy cell
-    * directories and every probe's cuts join). */
-  val DefaultMaxDeadFraction = 0.25
-
-  /** Tombstone-bloat trigger: compact when the `_deletes` companion's
-    * bytes reach this fraction of the coded entry bytes — the rail for
-    * corpus-shaped tombstone growth that inflates probes even when dead
-    * MASS is low. */
-  val DefaultMaxTombstoneBloat = 0.5
-
-  /** Rebuild trigger: the LIVE occupancy of the hottest cell vs the
-    * live mean over the trained layout (live entries / nlist) —
-    * tombstone-dead entries count toward `dead_fraction` (the Compact
-    * axis), never toward skew, so hot-id churn can't wedge the policy
-    * on advice `maintain` never executes. Freezing the coarse quantizer
-    * is standard IVF practice; what drifts is occupancy as the corpus
-    * distribution moves, and past this ratio a probe's nprobe cells
-    * stop bounding its work — compaction cannot fix that, only a
-    * [[build]]/[[buildPq]] re-train can. 8× leaves k-means' natural
-    * imbalance alone and fires on genuine drift. */
-  val DefaultMaxCellSkew = 8.0
-
   /** Measure index health and PERSIST it as a one-row `_health`
     * companion stamped with the version dir's file census — the stored
     * signal [[maintenanceAdvice]] reads back at metadata cost. One
@@ -1058,266 +923,91 @@ object IvfIndex {
     * Works on both index flavors. Stale the moment any index file
     * changes, like the sketch-stats catalog. */
   def analyzeHealth(wh: Warehouse, name: String): DataFrame =
-    analyzeHealthWith(wh, name, IndexAdvice.census(wh, name))
+    analyze(wh, name)
 
-  private def analyzeHealthWith(wh: Warehouse, name: String,
-                                c: IndexAdvice.Census): DataFrame =
-    healthDf(wh, measureHealth(wh, name, c))
-
-  /** The bounded health re-measure: one column-pruned entry scan,
-    * persisted, returned as the snapshot (so policy consumers never
-    * round-trip through a local DataFrame job). */
-  private def measureHealth(wh: Warehouse, name: String,
-                            c: IndexAdvice.Census): HealthSnapshot = {
+  /** The bounded health re-measure: a per-cell (count, dead) aggregate
+    * over one column-pruned entry scan collapses to ≤ nlist rows
+    * (bounded by construction), rolled up driver-side. */
+  override protected def measure(wh: Warehouse, name: String): IvfHealth = {
     val df = wh.read(name)
     val idName = df.columns.head // build/buildPq select the id first
-    val dp = new org.apache.hadoop.fs.Path(s"${wh.dataPath(name)}/_deletes")
-    // dead mass AND cell occupancy from ONE column-pruned entry scan:
-    // a per-cell (count, dead) aggregate collapses to ≤ nlist rows
-    // (bounded by construction), rolled up driver-side
     val base = df.select(col(idName).as("id"), col("seq"), col("cell"))
-    val withDead =
-      if (!fs(wh, dp).exists(dp)) base.withColumn("__dead", lit(0L))
-      else {
-        val cuts = wh.spark.read.parquet(dp.toString)
-          .groupBy(col("id")).agg(max(col("cut")).as("__cut"))
-        base.join(graft.engine.JoinPolicy.broadcastIfSmall(cuts),
-            Seq("id"), "left")
-          .withColumn("__dead", when(col("__cut").isNotNull &&
-            col("seq") < col("__cut"), 1L).otherwise(0L))
-      }
+    val withDead = withCuts(wh, wh.dataPath(name), base, "id") match {
+      case None => base.withColumn("__dead", lit(0L))
+      case Some(joined) =>
+        joined.withColumn("__dead", when(deadUnderCut, 1L).otherwise(0L))
+    }
     val perCell = withDead.groupBy(col("cell"))
       .agg(count(lit(1)).as("n"), sum(col("__dead")).as("d"))
       .collect()
-    persistHealth(wh, name,
-      perCell.map(r => (r.getInt(0), r.getLong(1) - r.getLong(2),
-        r.getLong(2))).toSeq, c)
+    IvfHealth(perCell.map(r => (r.getInt(0), r.getLong(1) - r.getLong(2),
+      r.getLong(2))).toSeq.sorted, nlistOf(wh, name))
   }
 
-  private def healthPath(wh: Warehouse, name: String) =
-    s"${wh.dataPath(name)}/_health"
+  override protected def renderEvidence(s: IndexAdvice.Snapshot[IvfHealth])
+      : String =
+    s"deletes_bytes=${s.deletesBytes}\ndata_bytes=${s.dataBytes}\n" +
+      s"nlist=${s.evidence.nlist}\n" +
+      s.evidence.cells.map(c => s"${c._1}:${c._2}:${c._3}")
+        .mkString("cells=", ",", "\n")
 
-  /** TEST HOOK: drop every driver-side evidence cache (health snapshots,
-    * seq frontier) — simulates a fresh driver against the same stored
-    * index, forcing the sidecar-parse and frontier-rescan paths. */
-  private[operators] def forgetDriverState(): Unit = {
-    healthCache.clear()
-    seqCache.clear()
-  }
+  override protected def parseEvidence(kv: Map[String, String]): IvfHealth =
+    IvfHealth(kv.getOrElse("cells", "").split(",").toSeq
+      .filter(_.nonEmpty).map { t =>
+        val Array(c, l, d) = t.split(":", 3)
+        (c.toInt, l.toLong, d.toLong)
+      }, kv("nlist").toLong)
 
-  /** The summary tuple from its inputs — ONE function shared by the
-    * write path and the sidecar read-back, so both derive bit-identical
-    * doubles from the same stored integers. */
-  private def summarize(cells: Seq[(Int, Long, Long)], nlist: Long,
-                        deletesBytes: Long, dataBytes: Long)
-      : (Long, Long, Double, Long, Long, Long, Long, Double) = {
-    val liveRows = cells.map(_._2).sum
-    val deadRows = cells.map(_._3).sum
-    val total = liveRows + deadRows
-    val maxCell = if (cells.isEmpty) 0L else cells.map(_._2).max
-    val meanCell = if (nlist == 0L) 0.0 else liveRows.toDouble / nlist
-    val skew = if (meanCell == 0.0) 1.0 else maxCell / meanCell
-    val deadFraction = if (total == 0L) 0.0 else deadRows.toDouble / total
-    (liveRows, deadRows, deadFraction, deletesBytes, dataBytes, nlist,
-      maxCell, skew)
-  }
-
-  /** Serialize/parse the `_health` sidecar — a driver-written key=value
-    * file ([[IndexAdvice.writeSidecar]]): health folds run on EVERY
-    * index mutation, and each previously paid two coalesce(1) parquet
-    * write JOBS for ≤ nlist rows of evidence. Bounded by construction,
-    * so the driver writes it the way it already writes manifests. */
-  private def renderHealth(s: HealthSnapshot): String = {
-    val sb = new StringBuilder("v=3\n")
-    sb ++= s"n_files=${s.nFiles}\ncensus_bytes=${s.totalBytes}\n"
-    sb ++= s"census_mtime=${s.maxMtime}\n"
-    sb ++= s"deletes_bytes=${s.summary._4}\ndata_bytes=${s.summary._5}\n"
-    sb ++= s"nlist=${s.summary._6}\n"
-    sb ++= s.cells.map(c => s"${c._1}:${c._2}:${c._3}")
-      .mkString("cells=", ",", "\n")
-    sb.toString
-  }
-
-  /** Try-wrapped end to end: a structurally bad sidecar (missing key,
-    * malformed cell triple, non-numeric value — e.g. a torn or foreign
-    * write) must read as None and trigger the bounded re-measure, never
-    * crash maintenance. A v!=3 version reads as stale the same way. */
-  private def parseHealth(body: String): Option[HealthSnapshot] =
-    scala.util.Try {
-      val kv = body.linesIterator.map(_.split("=", 2))
-        .collect { case Array(k, v) => k -> v }.toMap
-      if (!kv.get("v").contains("3")) None
-      else {
-        val cells = kv.getOrElse("cells", "").split(",").toSeq
-          .filter(_.nonEmpty).map { t =>
-            val Array(c, l, d) = t.split(":", 3)
-            (c.toInt, l.toLong, d.toLong)
-          }
-        val sum = summarize(cells, kv("nlist").toLong,
-          kv("deletes_bytes").toLong, kv("data_bytes").toLong)
-        Some(HealthSnapshot(kv("n_files").toLong, kv("census_bytes").toLong,
-          kv("census_mtime").toLong, cells, sum))
-      }
-    }.toOption.flatten
-
-  /** Driver-side snapshot of the last health evidence THIS driver
-    * persisted, keyed by table path and validated by the census stamp —
-    * the stored row's freshness discipline minus the parquet reads. A
-    * maintenance stream's per-mutation evidence consultations
-    * ([[freshCells]], [[readHealth]]) then cost ONE metadata listing and
-    * zero Spark jobs while nothing changed; any file change (including
-    * another driver's) moves the stamp and misses to disk, so the cache
-    * can serve stale bytes never — at worst a redundant read. The
-    * summary tuple is (live, dead, deadFraction, deletesBytes,
-    * dataBytes, nlist, maxCell, skew). */
-  private final case class HealthSnapshot(nFiles: Long, totalBytes: Long,
-      maxMtime: Long, cells: Seq[(Int, Long, Long)],
-      summary: (Long, Long, Double, Long, Long, Long, Long, Double))
-  private val healthCache =
-    new java.util.concurrent.ConcurrentHashMap[String, HealthSnapshot]()
-
-  /** The trained cell count — served from the per-version centroid
-    * cache: nlist is immutable within a version, and [[persistHealth]]
-    * runs once per index mutation, so a Spark count of the `_centroids`
-    * companion per fold was pure job-count overhead (the q204 composite
-    * is fixed-overhead-bound: 171 stages, milliseconds of real work
-    * each). */
+  /** The trained cell count, served from the per-version centroid cache
+    * (nlist is immutable within a version), so a health fold on a warm
+    * cache runs no Spark job. */
   private def nlistOf(wh: Warehouse, name: String): Long =
     loadCentroids(wh, wh.dataPath(name)).length.toLong
 
-  /** The one-row `_health` frame for a summary tuple — what
-    * [[persistHealth]] wrote, rebuilt locally so a cache hit never
-    * re-reads parquet. */
-  private def healthDf(wh: Warehouse, s: HealthSnapshot): DataFrame = {
+  override protected def healthRow(wh: Warehouse,
+                                   s: IndexAdvice.Snapshot[IvfHealth])
+      : DataFrame = {
     import wh.spark.implicits._
-    Seq((s.summary._1, s.summary._2, s.summary._3, s.summary._4,
-        s.summary._5, s.summary._6, s.summary._7, s.summary._8,
-        s.nFiles, s.totalBytes))
+    val e = s.evidence
+    Seq((e.liveRows, e.deadRows, e.deadFraction, s.deletesBytes,
+        s.dataBytes, e.nlist, e.maxCell, e.skew, s.nFiles, s.totalBytes))
       .toDF("live_rows", "dead_rows", "dead_fraction", "deletes_bytes",
         "data_bytes", "nlist", "max_cell_rows", "cell_skew", "n_files",
         "census_bytes")
   }
 
-  /** Persist the health evidence PAIR: the per-cell (cell, live, dead)
-    * table (in the `_health` sidecar, ≤ nlist cells — the state incremental folds
-    * update) and the one-row `_health` summary derived from it, both
-    * stamped with census `c`. Both companions share the `/_health` path
-    * prefix the census excludes, so persisting health never stales its
-    * own stamp.
-    *
-    * Occupancy skew is over LIVE entries only: dead mass measures as
-    * dead_fraction (the Compact axis), never as skew — otherwise
-    * re-embedding the same hot ids could push skew past the Rebuild
-    * threshold, and since Rebuild outranks Compact and `maintain`
-    * never executes it, the policy would wedge on advice it cannot
-    * act on while suppressing the compaction that CURES the reading. */
-  private def persistHealth(wh: Warehouse, name: String,
-                            cells: Seq[(Int, Long, Long)],
-                            c: IndexAdvice.Census): HealthSnapshot = {
-    val snap = HealthSnapshot(c.nFiles, c.totalBytes, c.maxMtime,
-      cells.sorted,
-      summarize(cells, nlistOf(wh, name), c.deletesBytes, c.dataBytes))
-    // ONE driver-written sidecar instead of two coalesce(1) parquet
-    // write jobs — the census excludes /_health paths, so persisting
-    // never stales the stamp `c` it carries
-    IndexAdvice.writeSidecar(wh, healthPath(wh, name), renderHealth(snap))
-    healthCache.put(s"${wh.root}/$name", snap)
-    snap // the snapshot IS what was stored — no read-back needed
-  }
-
-  /** The stored per-cell health table, ONLY when the `_health` sidecar
-    * is fresh for the current census — the captured state an
-    * incremental fold starts from. Costs one metadata listing (plus a
-    * driver-side sidecar read on a cold cache), zero Spark jobs. */
-  private def freshCells(wh: Warehouse,
-                         name: String): Option[Seq[(Int, Long, Long)]] =
-    freshSnapshot(wh, name, IndexAdvice.census(wh, name)).map(_.cells)
-
-  /** The health snapshot iff fresh for census `c`: the driver cache
-    * when its stamp matches, else the parsed `_health` sidecar when ITS
-    * stamp matches (another driver's fold — adopt it into the cache),
-    * else None (stale/absent — caller re-measures). */
-  private def freshSnapshot(wh: Warehouse, name: String,
-                            c: IndexAdvice.Census): Option[HealthSnapshot] = {
-    val key = s"${wh.root}/$name"
-    val hit = healthCache.get(key)
-    if (hit != null && hit.nFiles == c.nFiles &&
-        hit.totalBytes == c.totalBytes && hit.maxMtime == c.maxMtime)
-      Some(hit) // one listing, zero Spark jobs, zero reads
-    else
-      IndexAdvice.readSidecar(wh, healthPath(wh, name))
-        .flatMap(parseHealth)
-        .filter(s => s.nFiles == c.nFiles && s.totalBytes == c.totalBytes &&
-          s.maxMtime == c.maxMtime)
-        .map { s => healthCache.put(key, s); s }
-  }
-
-  /** Fold a batch's per-cell deltas into captured health evidence and
-    * persist it stamped with a FRESH census (one metadata listing) — the
-    * `appendAnalyzed` mergeable-summary pattern applied to index health:
-    * after any sequence of appends/reindexes/deletes whose folds all
-    * landed, [[maintenanceAdvice]] is metadata-cost instead of an entry
-    * re-scan. `liveDelta` adds live entries (an append); `deadDelta`
-    * moves live entries to dead (a tombstone cut). Single-maintainer
-    * contract, like every index write here: concurrent mutators would
-    * fold against each other's censuses and one fold would lose — the
-    * loser's stamp then reads stale and the next advice re-measures,
-    * so a race degrades to a re-scan, never to wrong advice. */
-  private def foldHealth(wh: Warehouse, name: String,
-                         pre: Seq[(Int, Long, Long)],
-                         liveDelta: Map[Int, Long],
-                         deadDelta: Map[Int, Long]): Unit = {
-    val preMap = pre.map(t => t._1 -> (t._2, t._3)).toMap
+  /** Fold a batch's per-cell deltas into captured health evidence:
+    * `liveDelta` adds live entries (an append); `deadDelta` moves live
+    * entries to dead (a tombstone cut). */
+  private def foldCells(wh: Warehouse, name: String, pre: IvfHealth,
+                        liveDelta: Map[Int, Long],
+                        deadDelta: Map[Int, Long]): IvfHealth = {
+    val preMap = pre.cells.map(t => t._1 -> (t._2, t._3)).toMap
     val keys = preMap.keySet ++ liveDelta.keySet ++ deadDelta.keySet
-    val cells = keys.toSeq.sorted.map { cl =>
+    IvfHealth(keys.toSeq.sorted.map { cl =>
       val (l, d) = preMap.getOrElse(cl, (0L, 0L))
       val dd = deadDelta.getOrElse(cl, 0L)
       (cl, l + liveDelta.getOrElse(cl, 0L) - dd, d + dd)
-    }
-    persistHealth(wh, name, cells, IndexAdvice.census(wh, name))
+    }, nlistOf(wh, name))
   }
 
   /** The stored health row — None when never analyzed on this version
     * or STALE (any index file changed since; the census stamp moved). */
   def readHealth(wh: Warehouse, name: String): Option[DataFrame] =
-    readHealthWith(wh, name, IndexAdvice.census(wh, name))
+    storedHealth(wh, name)
 
-  /** `c` is by-name so the freshness census runs only when a `_health`
-    * row exists to check — and so [[maintenanceAdvice]] can share ONE
-    * listing between the staleness check and the re-measure (the stale
-    * path would otherwise pay two back-to-back recursive listings, the
-    * dominant cost of the "health without scanning" contract). */
-  private def readHealthWith(wh: Warehouse, name: String,
-                             c: => IndexAdvice.Census)
-      : Option[DataFrame] = {
-    val hp = new org.apache.hadoop.fs.Path(healthPath(wh, name))
-    if (!fs(wh, hp).exists(hp)) None
-    else freshSnapshot(wh, name, c).map(healthDf(wh, _))
-  }
-
-  /** The maintenance POLICY: what should happen to this index NOW, from
-    * stored evidence only — the fresh `_health` row when one exists,
-    * a bounded re-measure otherwise (which persists, so the next call
-    * is metadata again). Ranked: occupancy drift past `maxCellSkew`
-    * advises Rebuild (structural — compaction cannot fix it, and the
-    * [[append]] scaladoc's "schedule a rebuild on a drift signal" stops
-    * being a comment here); otherwise dead mass / tombstone bloat past
-    * threshold advises Compact; otherwise Healthy. */
+  /** The maintenance POLICY ([[IndexAdvice.Tombstoned.advise]]):
+    * occupancy drift past `maxCellSkew` advises Rebuild (structural —
+    * compaction cannot fix it, and the [[append]] scaladoc's "schedule a
+    * rebuild on a drift signal" stops being a comment here); otherwise
+    * dead mass / tombstone bloat past threshold advises Compact;
+    * otherwise Healthy. */
   def maintenanceAdvice(wh: Warehouse, name: String,
                         maxDeadFraction: Double = DefaultMaxDeadFraction,
                         maxTombstoneBloat: Double = DefaultMaxTombstoneBloat,
-                        maxCellSkew: Double = DefaultMaxCellSkew)
-      : IndexAdvice = {
-    val c = IndexAdvice.census(wh, name) // ONE listing, shared
-    val s = freshSnapshot(wh, name, c)
-      .getOrElse(measureHealth(wh, name, c)).summary
-    val (deadF, delB, datB, skew) = (s._3, s._4, s._5, s._8)
-    if (skew >= maxCellSkew) IndexAdvice.Rebuild
-    else if (deadF >= maxDeadFraction ||
-        (datB > 0L && delB.toDouble / datB >= maxTombstoneBloat))
-      IndexAdvice.Compact
-    else IndexAdvice.Healthy
-  }
+                        maxCellSkew: Double = DefaultMaxSkew)
+      : IndexAdvice =
+    advise(wh, name, maxDeadFraction, maxTombstoneBloat, maxCellSkew)
 
   /** Execute the REBUILD arm from the index itself — for the
     * PLAIN-vector layout, whose entries carry the original vectors: the
@@ -1350,7 +1040,7 @@ object IvfIndex {
     val idName = df.columns.head // build selects the id first...
     val vecName = df.columns(1) // ...and the vector second
     val cents0 = loadCentroids(wh, vdir)
-    val live = liveOnly(wh, vdir, df, idName).drop("cell")
+    val live = liveOnly(wh, vdir, df, idName).drop("cell", "seq")
     val attrs = live.columns.toSeq
       .filterNot(c => c == idName || c == vecName)
     val out = build(wh, live, idName, vecName, cents0.head.length,
@@ -1369,7 +1059,7 @@ object IvfIndex {
     val df = wh.read(name)
     val idName = df.columns.head // build/buildPq select the id first
     liveOnly(wh, wh.dataPath(name),
-      df.select(col(idName).as("id"), col("seq")), "id")
+      df.select(col(idName).as("id"), col("seq"))).drop("seq")
   }
 
   /** Execute the REBUILD arm for the CODED (PQ) layout — the production
@@ -1420,7 +1110,8 @@ object IvfIndex {
     // the corpus only owes (id, vector); pinned because the coverage
     // check and the join both consume it
     val (liveEntries, nLive) = Exec.materializeCounted(liveOnly(wh, vdir,
-      df.select((idName +: attrs :+ "seq").map(col): _*), idName))
+      df.select((idName +: attrs :+ "seq").map(col): _*), idName)
+      .drop("seq"))
     val (src, nSrc) = Exec.materializeCounted(liveEntries.join(
       corpus.select(col(idCol).as(idName), col(vecCol)), Seq(idName)))
     // the DISTINCT joined-id count catches each defect independently:
@@ -1469,18 +1160,13 @@ object IvfIndex {
   def maintain(wh: Warehouse, name: String,
                maxDeadFraction: Double = DefaultMaxDeadFraction,
                maxTombstoneBloat: Double = DefaultMaxTombstoneBloat,
-               maxCellSkew: Double = DefaultMaxCellSkew,
+               maxCellSkew: Double = DefaultMaxSkew,
                executeRebuild: Boolean = false,
                rebuildSource: Option[PqRebuildSource] = None)
-      : IndexAdvice = {
-    val a = maintenanceAdvice(wh, name, maxDeadFraction,
-      maxTombstoneBloat, maxCellSkew)
-    if (a == IndexAdvice.Compact) compact(wh, name)
-    else if (a == IndexAdvice.Rebuild && executeRebuild) {
+      : IndexAdvice =
+    maintainWith(wh, name, maxDeadFraction, maxTombstoneBloat, maxCellSkew,
+      executeRebuild)(compact(wh, name),
       if (!wh.read(name).columns.contains("code")) rebuild(wh, name)
       else rebuildSource.foreach(s =>
-        rebuildPq(wh, s.corpus, s.idCol, s.vecCol, name))
-    }
-    a
-  }
+        rebuildPq(wh, s.corpus, s.idCol, s.vecCol, name)))
 }

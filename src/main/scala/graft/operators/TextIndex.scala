@@ -5,6 +5,26 @@ import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.Path
 import graft.engine.Warehouse
 import graft.functions.TextFunctions
+import IndexAdvice.{DefaultMaxDeadFraction, DefaultMaxSkew,
+  DefaultMaxTombstoneBloat}
+
+/** Text index health beyond the census stamp: live and tombstone-dead
+  * doclen generations (the docs-sized place to measure dead posting mass
+  * without scanning postings), and LIVE postings per hash bucket. The
+  * skew mean is over buckets HOLDING live postings: vacant buckets are
+  * hash space no token occupies, and what a scan pays for is how
+  * unevenly the mass that exists spreads over the directories that
+  * exist. */
+private[operators] final case class TextHealth(liveRows: Long,
+    deadRows: Long, buckets: Seq[(Int, Long)]) extends IndexAdvice.Evidence {
+  val livePostings: Long = buckets.map(_._2).sum
+  val maxBucket: Long = if (buckets.isEmpty) 0L else buckets.map(_._2).max
+  def nBuckets: Long = buckets.length.toLong
+  val skew: Double = {
+    val mean = if (nBuckets == 0L) 0.0 else livePostings.toDouble / nBuckets
+    if (mean == 0.0) 1.0 else maxBucket / mean
+  }
+}
 
 /** Persistent inverted text index where — like [[IvfIndex]] — the index
   * IS a table layout: the corpus' distinct (token, doc) postings publish
@@ -32,7 +52,7 @@ import graft.functions.TextFunctions
   *  - [[build]] (a rebuild) publishes a fresh version with no `_deletes`
   *    — the rebuild IS the tombstone compaction.
   */
-object TextIndex {
+object TextIndex extends IndexAdvice.Tombstoned[TextHealth]("doc_id") {
 
   /** Normalize a query term EXACTLY like [[TextFunctions.tokens]]
     * normalizes the build side — locale-invariant lowercase
@@ -52,12 +72,6 @@ object TextIndex {
     cleaned
   }
 
-  private def fs(wh: Warehouse, p: Path) =
-    p.getFileSystem(wh.spark.sessionState.newHadoopConf())
-
-  private def deletesPath(wh: Warehouse, name: String) =
-    s"${wh.dataPath(name)}/_deletes"
-
   private def doclenPath(wh: Warehouse, name: String) =
     s"${wh.dataPath(name)}/_doclen"
 
@@ -66,41 +80,17 @@ object TextIndex {
   def hasPositions(wh: Warehouse, name: String): Boolean =
     wh.read(name).schema.fieldNames.contains("pos")
 
-  /** Census-stamped cache of the doclen generation frontier, keyed by
-    * table path — the [[IvfIndex]] seqCache discipline: served only
-    * while the version dir's file census is byte-identical to the
-    * stamp (any foreign mutation misses to a re-scan), re-stamped by
-    * the mutation paths this driver runs, which know the frontier they
-    * just wrote. */
-  private val seqCache = new java.util.concurrent.ConcurrentHashMap[
-    String, ((Long, Long, Long), Long)]() // path -> (census stamp, maxSeq)
+  /** The generation frontier scans the (docs-sized, never
+    * postings-sized) doclen companion, column-pruned. */
+  override protected def frontierSource(wh: Warehouse,
+                                        name: String): DataFrame =
+    wh.spark.read.parquet(doclenPath(wh, name))
 
-  private def stampSeq(wh: Warehouse, name: String, maxSeq: Long): Unit = {
-    val c = IndexAdvice.census(wh, name)
-    seqCache.put(s"${wh.root}/$name", (c.stamp, maxSeq))
-  }
-
-  /** The next posting generation number: one past the highest `seq` any
-    * doclen row carries. A column-pruned scan of the (docs-sized, never
-    * postings-sized) doclen companion — batch-operation cost, derived
-    * from the data itself so it can never drift from what was actually
-    * written (a side counter file could) — served from the
-    * census-stamped [[seqCache]] when nothing changed since this driver
-    * last wrote or scanned the frontier. */
-  private def nextSeq(wh: Warehouse, name: String): Long = {
-    val c = IndexAdvice.census(wh, name)
-    val key = s"${wh.root}/$name"
-    val hit = seqCache.get(key)
-    if (hit != null && hit._1 == c.stamp)
-      hit._2 + 1L
-    else {
-      val r = wh.spark.read.parquet(doclenPath(wh, name))
-        .agg(max(col("seq"))).head()
-      val m = if (r.isNullAt(0)) -1L else r.getLong(0)
-      seqCache.put(key, (c.stamp, m))
-      m + 1L
-    }
-  }
+  /** Reindex's existing-only gate probes the doclen ids — the same cost
+    * class as the frontier scan every maintenance call already pays. */
+  override protected def existingIds(wh: Warehouse,
+                                     name: String): DataFrame =
+    wh.spark.read.parquet(doclenPath(wh, name)).select(col("doc_id"))
 
   private def tokenize(docs: DataFrame, idCol: String, textCol: String,
                        attrCols: Seq[String] = Nil): DataFrame =
@@ -144,26 +134,6 @@ object TextIndex {
       .withColumn("seq", lit(seq))
       .withColumn("bucket",
         Sampling.hashBucket(col("token"), "tix", nBuckets).cast("int"))
-  }
-
-  /** Drop tombstoned rows: a row survives unless a `_deletes` entry for
-    * its doc carries a cut ABOVE its generation (`seq < cut` dies — the
-    * generation appended by the same [[reindex]] carries `seq == cut`
-    * and lives). The deletes side is usually tiny (a re-crawl batch) but
-    * can grow corpus-shaped over an index's life, so the join is
-    * gate-checked, never force-broadcast. */
-  private def liveOnly(wh: Warehouse, name: String,
-                       df: DataFrame): DataFrame = {
-    val dp = new Path(deletesPath(wh, name))
-    if (!fs(wh, dp).exists(dp)) df
-    else {
-      val cuts = wh.spark.read.parquet(dp.toString)
-        .groupBy(col("doc_id")).agg(max(col("cut")).as("__cut"))
-      df.join(graft.engine.JoinPolicy.broadcastIfSmall(cuts),
-          Seq("doc_id"), "left")
-        .filter(col("__cut").isNull || col("seq") >= col("__cut"))
-        .drop("__cut")
-    }
   }
 
   /** Build: (doc, token, tf) postings — one row per distinct doc-token
@@ -328,13 +298,13 @@ object TextIndex {
     * untouched) instead of staling the stamp: a crawl-ingest stream's
     * [[maintenanceAdvice]] then stays metadata-cost across any number
     * of appends. Deletes and reindexes fold too when the batch clears
-    * the [[MinDeleteFoldRatio]] size gate (their newly-dead posting
-    * mass per bucket needs one column-pruned posting pass — see
-    * [[deleteAt]]); below it they stale the stamp and the next advice
+    * the [[IndexAdvice.MinDeleteFoldRatio]] size gate (their newly-dead
+    * posting mass per bucket needs one column-pruned posting pass — see
+    * [[foldDeletes]]); below it they stale the stamp and the next advice
     * re-measures once and re-persists. */
   private def appendToks(wh: Warehouse, toks: DataFrame, name: String,
                          nBuckets: Int, seq: Long, nDocs: Long): Unit = {
-    val pre = freshHealth(wh, name)
+    val pre = freshEvidence(wh, name)
     // size-aware doclen landing: nextSeq and every ranked search scan
     // this companion, and a long-lived stream would otherwise leave
     // |shuffle partitions| files per micro-batch — a small batch lands
@@ -356,18 +326,11 @@ object TextIndex {
     // a long-lived index)
     val posts = postingsOf(toks, nBuckets, seq, hasPositions(wh, name))
       .repartition(IndexAdvice.shufflePartitions(wh), col("bucket"))
-    val batch = if (pre.isDefined) graft.engine.Exec.materialize(posts)
-      else posts
-    wh.append(batch, name)
-    pre.foreach { case (live, dead, buckets) =>
-      val delta = batch.groupBy(col("bucket"))
-        .agg(count(lit(1)).as("n")).collect()
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap
-      val preMap = buckets.toMap
-      val merged = (preMap.keySet ++ delta.keySet).toSeq.sorted
-        .map(b => (b, preMap.getOrElse(b, 0L) + delta.getOrElse(b, 0L)))
-      persistHealth(wh, name, live + nDocs, dead, merged,
-        IndexAdvice.census(wh, name))
+    appendFolding(wh, name, pre, posts, "bucket") { (e, delta) =>
+      val preMap = e.buckets.toMap
+      TextHealth(e.liveRows + nDocs, e.deadRows,
+        (preMap.keySet ++ delta.keySet).toSeq.sorted
+          .map(b => (b, preMap.getOrElse(b, 0L) + delta.getOrElse(b, 0L))))
     }
     stampSeq(wh, name, seq) // this driver KNOWS the new frontier
   }
@@ -383,81 +346,27 @@ object TextIndex {
     deleteAt(wh, docIds.select(col(idCol).as("doc_id")), name,
       nextSeq(wh, name), onlyExisting = false)
 
-  /** Tombstone write at an already-resolved cut. With `onlyExisting` the
-    * id set first semi-joins against the doclen companion (docs-sized,
-    * column-pruned — the same cost class as the `nextSeq` scan every
-    * maintenance call already pays) and skips the write when nothing
-    * survives: a reindex stream of mostly-NEW documents then grows no
-    * `_deletes` at all, instead of one useless tombstone file-pair per
-    * micro-batch that every future probe's cuts join would pay for. */
-  private def deleteAt(wh: Warehouse, ids: DataFrame, name: String,
-                       cut: Long, onlyExisting: Boolean): Unit = {
-    val base = ids.distinct()
-    // the tombstone count rides the pinning job (Observation) — no
-    // separate count() job per mutation
-    val (toTomb, n) = graft.engine.Exec.materializeCounted(
-      if (!onlyExisting) base
-      else base.join(wh.spark.read.parquet(doclenPath(wh, name))
-        .select(col("doc_id")), Seq("doc_id"), "left_semi"))
-    // size-aware file-in: a small tombstone batch lands as ONE file-pair
-    // (every search's cuts join lists this dir; one file per shuffle
-    // partition per call was the old shape), a corpus-shaped delete set
-    // keeps bounded multi-task writers
-    if (n > 0L) {
-      // capture health + the newly-dead masses BEFORE the tombstone
-      // write: the deltas must count rows live under the CURRENT cuts
-      // (the new cut would make them all read dead), and the capture's
-      // census stamp must predate the file change. The per-bucket
-      // posting delta is the one cost the append fold never pays — a
-      // column-pruned (doc_id, seq, bucket) pass, exactly the scan
-      // [[analyzeHealth]] does — so it is size-gated like [[IvfIndex]]'s
-      // delete fold: it runs only while stored health is fresh AND the
-      // batch is at least 1/MinDeleteFoldRatio of the doclen
-      // generations. A re-crawl stream of micro-batches below the gate
-      // stales the stamp instead (one re-measure per advice
-      // consultation — the pre-fold behavior); a bulk purge folds and
-      // keeps advice at metadata cost.
-      val pre = freshHealth(wh, name).filter { case (live, dead, _) =>
-        n >= (live + dead + MinDeleteFoldRatio - 1) / MinDeleteFoldRatio
-      }
-      val deltas = pre.map { _ =>
-        val ddl = liveOnly(wh, name,
-          wh.spark.read.parquet(doclenPath(wh, name))
-            .select(col("doc_id"), col("seq")))
-          .join(toTomb, Seq("doc_id"), "left_semi").count()
-        val db = liveOnly(wh, name,
-          wh.read(name).select(col("doc_id"), col("seq"), col("bucket")))
-          .join(toTomb, Seq("doc_id"), "left_semi")
-          .groupBy(col("bucket")).agg(count(lit(1)).as("n")).collect()
-          .map(r => r.getInt(0) -> r.getLong(1)).toMap
-        (ddl, db)
-      }
-      // validate the cached frontier against the PRE-write census (see
-      // IvfIndex.deleteAt): a foreign write landing after the caller's
-      // nextSeq() must invalidate, not be absorbed under a stale maxSeq
-      val preWrite = IndexAdvice.census(wh, name)
-      toTomb.withColumn("cut", lit(cut))
-        .repartition(IndexAdvice.companionShards(n))
-        .write.mode(org.apache.spark.sql.SaveMode.Append)
-        .parquet(deletesPath(wh, name))
-      pre.foreach { case (live, dead, buckets) =>
-        val (ddl, db) = deltas.get
-        // buckets whose every posting died disappear, matching the
-        // re-measure's live-only census (the skew mean is over buckets
-        // HOLDING live postings)
-        val folded = buckets
-          .map { case (b, m) => (b, m - db.getOrElse(b, 0L)) }
-          .filter(_._2 > 0L)
-        persistHealth(wh, name, live - ddl, dead + ddl, folded,
-          IndexAdvice.census(wh, name))
-      }
-      // the tombstone write moved the census but not the doclen frontier
-      val key = s"${wh.root}/$name"
-      val prev = seqCache.get(key)
-      if (prev != null && prev._1 == preWrite.stamp)
-        stampSeq(wh, name, prev._2)
-      else if (prev != null) seqCache.remove(key)
-    }
+  /** A delete's health fold: the tombstoned docs' live doclen
+    * generations turn dead, and their live postings leave each bucket's
+    * mass — a column-pruned (doc_id, seq, bucket) pass, exactly the scan
+    * [[analyzeHealth]] does, which is why [[deleteAt]] size-gates it.
+    * Buckets whose every posting died disappear, matching the
+    * re-measure's live-only census. */
+  override protected def foldDeletes(wh: Warehouse, name: String,
+                                     pre: TextHealth,
+                                     tomb: DataFrame): TextHealth = {
+    val ddl = liveOnly(wh, wh.dataPath(name),
+      wh.spark.read.parquet(doclenPath(wh, name))
+        .select(col("doc_id"), col("seq")))
+      .join(tomb, Seq("doc_id"), "left_semi").count()
+    val db = liveOnly(wh, wh.dataPath(name),
+      wh.read(name).select(col("doc_id"), col("seq"), col("bucket")))
+      .join(tomb, Seq("doc_id"), "left_semi")
+      .groupBy(col("bucket")).agg(count(lit(1)).as("n")).collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    TextHealth(pre.liveRows - ddl, pre.deadRows + ddl, pre.buckets
+      .map { case (b, m) => (b, m - db.getOrElse(b, 0L)) }
+      .filter(_._2 > 0L))
   }
 
   /** Continuous indexing: a streaming crawl becomes searchable batch by
@@ -488,7 +397,7 @@ object TextIndex {
                      maintainEvery: Int = 0,
                      maxDeadFraction: Double = DefaultMaxDeadFraction,
                      maxTombstoneBloat: Double = DefaultMaxTombstoneBloat,
-                     maxBucketSkew: Double = DefaultMaxBucketSkew)
+                     maxBucketSkew: Double = DefaultMaxSkew)
       : org.apache.spark.sql.streaming.StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", checkpoint)
@@ -534,9 +443,9 @@ object TextIndex {
     // dead mass zeroes, and the doclen count is the RECONCILED one
     // (torn-append phantoms dropped below), so a policy-fired
     // compaction leaves the new version's evidence fresh too
-    val pre = freshHealth(wh, name)
-    val live = liveOnly(wh, name, wh.read(name))
-    val dlLive = liveOnly(wh, name,
+    val pre = freshEvidence(wh, name)
+    val live = liveOnly(wh, wh.dataPath(name), wh.read(name))
+    val dlLive = liveOnly(wh, wh.dataPath(name),
       wh.spark.read.parquet(doclenPath(wh, name)))
     val gens = live.select(col("doc_id"), col("seq")).distinct()
     // pinned: the reconciled frame feeds a count AND the write (and the
@@ -563,10 +472,8 @@ object TextIndex {
         dl.repartition(IndexAdvice.companionShards(nDl))
           .write.parquet(s"$vdir/_doclen")
       })
-    pre.foreach { case (_, _, buckets) =>
-      persistHealth(wh, name, nDl, 0L, buckets,
-        IndexAdvice.census(wh, name))
-    }
+    pre.foreach(e => persistHealth(wh, name, TextHealth(nDl, 0L, e.buckets),
+      IndexAdvice.census(wh, name)))
     // NO seq stamp: unlike IvfIndex.compact, the text rewrite preserves
     // each row's generation (doclen reconciliation joins on (doc_id,
     // seq)) — the next frontier consult re-scans the fresh doclen once
@@ -633,7 +540,7 @@ object TextIndex {
   /** Execute the REBUILD arm from the index itself — the policy loop's
     * last caller burden folded into the engine: when occupancy drift
     * breaks the frozen hash layout's pruning premise (the
-    * [[DefaultMaxBucketSkew]] trigger), this re-buckets the LIVE
+    * [[IndexAdvice.DefaultMaxSkew]] trigger), this re-buckets the LIVE
     * postings at the granularity [[chooseBuckets]] derives from the
     * stored `_health` sidecar bucket evidence and republishes atomically —
     * same discipline as [[compact]] (live rows only, doclen reconciled,
@@ -651,28 +558,25 @@ object TextIndex {
     * [[chooseBucketsOrFallback]] contract. Returns the published
     * version. */
   def rebuild(wh: Warehouse, name: String = "text_index",
-              maxBucketSkew: Double = DefaultMaxBucketSkew): String = {
+              maxBucketSkew: Double = DefaultMaxSkew): String = {
     import wh.spark.implicits._
     val current = layoutOf(wh, name)
     require(current >= 1L,
       s"index '$name' predates the self-describing _layout marker — a " +
         "re-bucket needs the stored granularity; run build() over the " +
         "corpus instead")
-    val pre = freshHealth(wh, name).getOrElse {
-      analyzeHealthWith(wh, name, IndexAdvice.census(wh, name))
-      freshHealth(wh, name).get
-    }
-    val (_, _, buckets) = pre
+    val buckets = freshEvidence(wh, name).getOrElse(
+      measureHealth(wh, name, IndexAdvice.census(wh, name)).evidence).buckets
     val (nb, exactFold) =
       chooseBucketsOrFallback(current.toInt, buckets, maxBucketSkew)
     // rewrite FROM the index: live postings re-bucketed through the
     // frozen hash at the chosen count, doclen reconciled exactly like
     // compact (torn-append dl>0 generations with no postings drop,
     // legitimate dl=0 rows survive)
-    val live = liveOnly(wh, name, wh.read(name))
+    val live = liveOnly(wh, wh.dataPath(name), wh.read(name))
       .withColumn("bucket",
         Sampling.hashBucket(col("token"), "tix", nb).cast("int"))
-    val dlLive = liveOnly(wh, name,
+    val dlLive = liveOnly(wh, wh.dataPath(name),
       wh.spark.read.parquet(doclenPath(wh, name)))
     val gens = live.select(col("doc_id"), col("seq")).distinct()
     val (dl, nDl) = graft.engine.Exec.materializeCounted(
@@ -695,7 +599,7 @@ object TextIndex {
       val folded = buckets.groupBy(_._1 % nb).toSeq
         .map { case (b, ms) => (b, ms.map(_._2).sum) }
         .filter(_._2 > 0L).sorted
-      persistHealth(wh, name, nDl, 0L, folded,
+      persistHealth(wh, name, TextHealth(nDl, 0L, folded),
         IndexAdvice.census(wh, name))
     } else
       // non-divisor fallback: `hash % nb` is NOT a regroup of
@@ -703,7 +607,7 @@ object TextIndex {
       // measured re-analyze the fallback contract promises
       // (chooseBucketsOrFallback), keeping post-rebuild advice at
       // metadata cost from here on
-      analyzeHealthWith(wh, name, IndexAdvice.census(wh, name))
+      measureHealth(wh, name, IndexAdvice.census(wh, name))
     // NO seq stamp: the re-bucket preserves row generations (see
     // compact) — the next frontier consult re-scans the fresh doclen
     out
@@ -758,11 +662,11 @@ object TextIndex {
     // is row-identical to ranking against an index built on the
     // filtered corpus, not a post-filtered global top-k (which would
     // return fewer than k and mis-rank by out-of-scope stats)
-    val dlAll = liveOnly(wh, name,
+    val dlAll = liveOnly(wh, wh.dataPath(name),
       wh.spark.read.parquet(doclenPath(wh, name))).drop("seq")
     val dl = filter.map(f => dlAll.filter(f)).getOrElse(dlAll)
       .select(col("doc_id"), col("dl"))
-    val postsAll = liveOnly(wh, name,
+    val postsAll = liveOnly(wh, wh.dataPath(name),
       wh.read(name)
         .filter(col("bucket").isin(buckets: _*) &&
           col("token").isin(toks: _*))
@@ -834,7 +738,7 @@ object TextIndex {
     val nb = resolveBuckets(wh, name, nBuckets)
     val buckets = toks
       .map(t => Sampling.hashBucketOf(t, "tix", nb).toInt).distinct
-    val posts = graft.engine.Exec.materialize(liveOnly(wh, name,
+    val posts = graft.engine.Exec.materialize(liveOnly(wh, wh.dataPath(name),
       wh.read(name)
         .filter(col("bucket").isin(buckets: _*) &&
           col("token").isin(toks.distinct: _*))
@@ -883,7 +787,7 @@ object TextIndex {
     // defeat static pruning)
     val buckets = toks
       .map(t => Sampling.hashBucketOf(t, "tix", nb).toInt).distinct
-    val hits = liveOnly(wh, name,
+    val hits = liveOnly(wh, wh.dataPath(name),
       wh.read(name)
         .filter(col("bucket").isin(buckets: _*) &&
           col("token").isin(toks: _*))
@@ -906,7 +810,7 @@ object TextIndex {
     filter match {
       case None => candidates
       case Some(f) =>
-        val allowed = liveOnly(wh, name,
+        val allowed = liveOnly(wh, wh.dataPath(name),
           wh.spark.read.parquet(doclenPath(wh, name))).drop("seq")
           .filter(f).select("doc_id")
         candidates.join(allowed, Seq("doc_id"), "left_semi")
@@ -933,7 +837,7 @@ object TextIndex {
     val nb = resolveBuckets(wh, name, nBuckets)
     val buckets = toks
       .map(t => Sampling.hashBucketOf(t, "tix", nb).toInt).distinct
-    val hits = liveOnly(wh, name,
+    val hits = liveOnly(wh, wh.dataPath(name),
       wh.read(name)
         .filter(col("bucket").isin(buckets: _*) &&
           col("token").isin(toks: _*))
@@ -944,47 +848,6 @@ object TextIndex {
       .select(col("doc_id"), col("n_matched"))
     attrGate(wh, name, hits, filter)
   }
-
-  /** A delete's health fold runs only when the tombstone batch is at
-    * least 1/this of the index's doclen generations — below that, the
-    * fold's column-pruned per-bucket posting pass per call costs more
-    * than the single re-measure the stale stamp defers to (see
-    * [[deleteAt]]; the [[IvfIndex.MinDeleteFoldRatio]] discipline). */
-  val MinDeleteFoldRatio = 10000L
-
-  /** Compaction trigger: compact when at least this fraction of doclen
-    * generations are tombstone-dead (each dead generation holds dead
-    * postings in proportion — the doclen companion is the docs-sized
-    * place to measure posting dead mass without scanning postings). */
-  val DefaultMaxDeadFraction = 0.25
-
-  /** Tombstone-bloat trigger: compact when the `_deletes` companion's
-    * bytes reach this fraction of the live posting data bytes — the
-    * rail for the scaladoc'd "deletes can grow corpus-shaped" failure,
-    * which inflates every search's cuts join even when the DEAD mass is
-    * low (many tombstones over few generations). */
-  val DefaultMaxTombstoneBloat = 0.5
-
-  /** Rebuild trigger: LIVE postings in the hottest hash bucket vs the
-    * mean over the buckets that hold any live posting — the text
-    * analogue of [[IvfIndex]]'s cell-occupancy skew. The frozen
-    * `hash_bucket` layout's pruning premise is that posting MASS spreads
-    * roughly evenly over the bucket directories; a vocabulary drift
-    * toward a few dominant terms (boilerplate injection, a template
-    * flood) concentrates their token-occurrence-sized posting lists in
-    * the few buckets those terms hash to, and past this ratio every
-    * search, append, and compaction touching a hot bucket stops being
-    * bounded by `Σ df(query terms) / spread`. Compaction cannot fix it —
-    * the layout itself no longer matches the term-mass distribution —
-    * only a [[build]] at a granularity chosen against the OBSERVED
-    * distribution can (often coarser: few dominant terms even out over
-    * fewer, bigger buckets; the extreme fix is a stopword cut at
-    * tokenize time — a caller decision either way, which is why
-    * [[maintain]] only SURFACES Rebuild). Measured on the synthetic
-    * docs corpus: natural Zipfian skew reads ~2.5 (64 buckets) / ~1.9
-    * (8 buckets); a planted 4-term dominant drift reads 3.7-6.6. 8×
-    * leaves natural Zipf alone and fires on genuine dominance. */
-  val DefaultMaxBucketSkew = 8.0
 
   /** Measure index health and PERSIST it as a one-row `_health`
     * companion (dead generation mass, tombstone bytes, live counts,
@@ -997,233 +860,79 @@ object TextIndex {
     * sketch-stats catalog. */
   def analyzeHealth(wh: Warehouse,
                     name: String = "text_index"): DataFrame =
-    analyzeHealthWith(wh, name, IndexAdvice.census(wh, name))
-
-  private def analyzeHealthWith(wh: Warehouse, name: String,
-                                c: IndexAdvice.Census): DataFrame =
-    healthDf(wh, measureHealth(wh, name, c))
+    analyze(wh, name)
 
   /** The bounded health re-measure: one doclen pass plus one
-    * column-pruned posting pass, persisted, returned as the snapshot
-    * (policy consumers never round-trip through a local DataFrame
-    * job). */
-  private def measureHealth(wh: Warehouse, name: String,
-                            c: IndexAdvice.Census): HealthSnapshot = {
-    import wh.spark.implicits._
+    * column-pruned posting pass. Skew counts LIVE postings only — dead
+    * mass measures as dead_fraction (the Compact axis), never as
+    * structural skew. */
+  override protected def measure(wh: Warehouse,
+                                 name: String): TextHealth = {
     val dlv = wh.spark.read.parquet(doclenPath(wh, name))
-    val dp = new Path(deletesPath(wh, name))
     val (liveRows, deadRows): (Long, Long) =
-      if (!fs(wh, dp).exists(dp)) (dlv.count(), 0L)
-      else {
-        val cuts = wh.spark.read.parquet(dp.toString)
-          .groupBy(col("doc_id")).agg(max(col("cut")).as("__cut"))
-        val r = dlv.join(graft.engine.JoinPolicy.broadcastIfSmall(cuts),
-            Seq("doc_id"), "left")
-          .agg(coalesce(sum(when(col("__cut").isNotNull &&
-              col("seq") < col("__cut"), 1L).otherwise(0L)), lit(0L))
-            .as("dead"), count(lit(1)).as("total"))
-          .head()
-        (r.getLong(1) - r.getLong(0), r.getLong(0))
+      withCuts(wh, wh.dataPath(name), dlv, "doc_id") match {
+        case None => (dlv.count(), 0L)
+        case Some(joined) =>
+          val r = joined
+            .agg(coalesce(sum(when(deadUnderCut, 1L).otherwise(0L)),
+              lit(0L)).as("dead"), count(lit(1)).as("total"))
+            .head()
+          (r.getLong(1) - r.getLong(0), r.getLong(0))
       }
-    val deadFraction =
-      if (liveRows + deadRows == 0L) 0.0
-      else deadRows.toDouble / (liveRows + deadRows)
-    // LIVE posting mass per bucket — skew over live postings only, the
-    // IvfIndex discipline: dead mass measures as dead_fraction (the
-    // Compact axis), never as structural skew. The mean is over buckets
-    // HOLDING live postings: vacant buckets are hash space no token
-    // occupies, and what a scan pays for is how unevenly the mass that
-    // exists spreads over the directories that exist.
-    val perBucket = liveOnly(wh, name,
+    val perBucket = liveOnly(wh, wh.dataPath(name),
         wh.read(name).select(col("doc_id"), col("seq"), col("bucket")))
       .groupBy(col("bucket")).agg(count(lit(1)).as("n"))
       .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq.sorted
-    persistHealth(wh, name, liveRows, deadRows, perBucket, c)
+    TextHealth(liveRows, deadRows, perBucket)
   }
 
-  private def healthPath(wh: Warehouse, name: String) =
-    s"${wh.dataPath(name)}/_health"
-
-  /** TEST HOOK: drop every driver-side evidence cache (health snapshots,
-    * seq frontier) — simulates a fresh driver against the same stored
-    * index, forcing the sidecar-parse and frontier-rescan paths. */
-  private[operators] def forgetDriverState(): Unit = {
-    healthCache.clear()
-    seqCache.clear()
+  override protected def renderEvidence(s: IndexAdvice.Snapshot[TextHealth])
+      : String = {
+    val e = s.evidence
+    s"live_rows=${e.liveRows}\ndead_rows=${e.deadRows}\n" +
+      s"deletes_bytes=${s.deletesBytes}\ndata_bytes=${s.dataBytes}\n" +
+      e.buckets.map(b => s"${b._1}:${b._2}").mkString("buckets=", ",", "\n")
   }
 
-  /** The summary tuple from its inputs — ONE function shared by the
-    * write path and the sidecar read-back, so both derive bit-identical
-    * doubles from the same stored integers. */
-  private def summarize(liveRows: Long, deadRows: Long,
-                        buckets: Seq[(Int, Long)], deletesBytes: Long,
-                        dataBytes: Long)
-      : (Long, Long, Double, Long, Long, Long, Double, Long, Long) = {
-    val deadFraction =
-      if (liveRows + deadRows == 0L) 0.0
-      else deadRows.toDouble / (liveRows + deadRows)
-    val livePostings = buckets.map(_._2).sum
-    val maxBucket = if (buckets.isEmpty) 0L else buckets.map(_._2).max
-    val nBuckets = buckets.length.toLong
-    val meanBucket =
-      if (nBuckets == 0L) 0.0 else livePostings.toDouble / nBuckets
-    val bucketSkew = if (meanBucket == 0.0) 1.0 else maxBucket / meanBucket
-    (liveRows, deadRows, deadFraction, livePostings, maxBucket, nBuckets,
-      bucketSkew, deletesBytes, dataBytes)
-  }
+  override protected def parseEvidence(kv: Map[String, String]): TextHealth =
+    TextHealth(kv("live_rows").toLong, kv("dead_rows").toLong,
+      kv.getOrElse("buckets", "").split(",").toSeq
+        .filter(_.nonEmpty).map { t =>
+          val Array(b, n) = t.split(":", 2)
+          (b.toInt, n.toLong)
+        })
 
-  /** Serialize/parse the `_health` sidecar — one driver-written
-    * key=value file ([[IndexAdvice.writeSidecar]]) instead of two
-    * coalesce(1) parquet write JOBS per health fold (bounded ≤ nBuckets
-    * rows of evidence; the maintenance composites are fixed-overhead
-    * bound). */
-  private def renderHealth(s: HealthSnapshot): String = {
-    val sb = new StringBuilder("v=3\n")
-    sb ++= s"n_files=${s.nFiles}\ncensus_bytes=${s.totalBytes}\n"
-    sb ++= s"census_mtime=${s.maxMtime}\n"
-    sb ++= s"live_rows=${s.summary._1}\ndead_rows=${s.summary._2}\n"
-    sb ++= s"deletes_bytes=${s.summary._8}\ndata_bytes=${s.summary._9}\n"
-    sb ++= s.buckets.map(b => s"${b._1}:${b._2}")
-      .mkString("buckets=", ",", "\n")
-    sb.toString
-  }
-
-  /** Try-wrapped end to end (see IvfIndex.parseHealth): a structurally
-    * bad sidecar reads as None — the bounded re-measure — never a
-    * maintenance crash. */
-  private def parseHealth(body: String): Option[HealthSnapshot] =
-    scala.util.Try {
-      val kv = body.linesIterator.map(_.split("=", 2))
-        .collect { case Array(k, v) => k -> v }.toMap
-      if (!kv.get("v").contains("3")) None
-      else {
-        val buckets = kv.getOrElse("buckets", "").split(",").toSeq
-          .filter(_.nonEmpty).map { t =>
-            val Array(b, n) = t.split(":", 2)
-            (b.toInt, n.toLong)
-          }
-        val sum = summarize(kv("live_rows").toLong, kv("dead_rows").toLong,
-          buckets, kv("deletes_bytes").toLong, kv("data_bytes").toLong)
-        Some(HealthSnapshot(kv("n_files").toLong, kv("census_bytes").toLong,
-          kv("census_mtime").toLong, buckets, sum))
-      }
-    }.toOption.flatten
-
-  /** Driver-side snapshot of the last health evidence THIS driver
-    * persisted — the [[IvfIndex]] healthCache discipline: keyed by
-    * table path, validated by the census stamp, so per-mutation
-    * evidence reads cost one metadata listing and zero Spark jobs
-    * while nothing changed; any file change misses to disk. Summary is
-    * (live, dead, deadFraction, livePostings, maxBucket, nBuckets,
-    * bucketSkew, deletesBytes, dataBytes). */
-  private final case class HealthSnapshot(nFiles: Long, totalBytes: Long,
-      maxMtime: Long, buckets: Seq[(Int, Long)],
-      summary: (Long, Long, Double, Long, Long, Long, Double, Long, Long))
-  private val healthCache =
-    new java.util.concurrent.ConcurrentHashMap[String, HealthSnapshot]()
-
-  /** The one-row `_health` frame for a snapshot — what [[persistHealth]]
-    * wrote, rebuilt locally so a cache hit never re-reads parquet. */
-  private def healthDf(wh: Warehouse, s: HealthSnapshot): DataFrame = {
+  override protected def healthRow(wh: Warehouse,
+                                   s: IndexAdvice.Snapshot[TextHealth])
+      : DataFrame = {
     import wh.spark.implicits._
-    Seq((s.summary._1, s.summary._2, s.summary._3, s.summary._4,
-        s.summary._5, s.summary._6, s.summary._7, s.summary._8,
-        s.summary._9, s.nFiles, s.totalBytes))
+    val e = s.evidence
+    Seq((e.liveRows, e.deadRows, e.deadFraction, e.livePostings,
+        e.maxBucket, e.nBuckets, e.skew, s.deletesBytes, s.dataBytes,
+        s.nFiles, s.totalBytes))
       .toDF("live_rows", "dead_rows", "dead_fraction", "live_postings",
         "max_bucket_postings", "n_buckets", "bucket_skew",
         "deletes_bytes", "data_bytes", "n_files", "census_bytes")
-  }
-
-  /** Persist the health evidence PAIR: the per-bucket (bucket, live
-    * postings) table (in the `_health` sidecar, ≤ nBuckets rows — the state
-    * append folds update) and the one-row `_health` summary, both
-    * stamped with census `c`. Both share the `/_health` path prefix the
-    * census excludes, so persisting health never stales its own stamp. */
-  private def persistHealth(wh: Warehouse, name: String, liveRows: Long,
-                            deadRows: Long, buckets: Seq[(Int, Long)],
-                            c: IndexAdvice.Census): HealthSnapshot = {
-    val snap = HealthSnapshot(c.nFiles, c.totalBytes, c.maxMtime, buckets,
-      summarize(liveRows, deadRows, buckets, c.deletesBytes, c.dataBytes))
-    // ONE driver-written sidecar instead of two coalesce(1) parquet
-    // write jobs — the census excludes /_health paths, so persisting
-    // never stales the stamp `c` it carries
-    IndexAdvice.writeSidecar(wh, healthPath(wh, name), renderHealth(snap))
-    healthCache.put(s"${wh.root}/$name", snap)
-    snap // the snapshot IS what was stored — no read-back needed
-  }
-
-  /** The stored evidence an append's fold starts from — (live doclen
-    * rows, dead doclen rows, per-bucket live postings), ONLY when the
-    * `_health` summary is fresh for the current census AND the buckets
-    * companion exists. One metadata listing when a health row exists,
-    * nothing otherwise. */
-  private def freshHealth(wh: Warehouse, name: String)
-      : Option[(Long, Long, Seq[(Int, Long)])] =
-    freshSnapshot(wh, name, IndexAdvice.census(wh, name))
-      .map(s => (s.summary._1, s.summary._2, s.buckets))
-
-  /** The health snapshot iff fresh for census `c`: the driver cache
-    * when its stamp matches, else the parsed `_health` sidecar when ITS
-    * stamp matches (another driver's fold — adopt it into the cache),
-    * else None (stale/absent — caller re-measures). */
-  private def freshSnapshot(wh: Warehouse, name: String,
-                            c: IndexAdvice.Census): Option[HealthSnapshot] = {
-    val key = s"${wh.root}/$name"
-    val hit = healthCache.get(key)
-    if (hit != null && hit.nFiles == c.nFiles &&
-        hit.totalBytes == c.totalBytes && hit.maxMtime == c.maxMtime)
-      Some(hit) // one listing, zero Spark jobs, zero reads
-    else
-      IndexAdvice.readSidecar(wh, healthPath(wh, name))
-        .flatMap(parseHealth)
-        .filter(s => s.nFiles == c.nFiles && s.totalBytes == c.totalBytes &&
-          s.maxMtime == c.maxMtime)
-        .map { s => healthCache.put(key, s); s }
   }
 
   /** The stored health row — None when never analyzed on this version
     * or STALE (any index file changed since; the census stamp moved). */
   def readHealth(wh: Warehouse,
                  name: String = "text_index"): Option[DataFrame] =
-    readHealthWith(wh, name, IndexAdvice.census(wh, name))
+    storedHealth(wh, name)
 
-  /** `c` is by-name so the freshness census runs only when a `_health`
-    * row exists to check — and so [[maintenanceAdvice]] can share ONE
-    * listing between the staleness check and the re-measure (the stale
-    * path would otherwise pay two back-to-back recursive listings, the
-    * dominant cost of the "health without scanning" contract). */
-  private def readHealthWith(wh: Warehouse, name: String,
-                             c: => IndexAdvice.Census)
-      : Option[DataFrame] = {
-    val hp = new Path(healthPath(wh, name))
-    if (!fs(wh, hp).exists(hp)) None
-    else freshSnapshot(wh, name, c).map(healthDf(wh, _))
-  }
-
-  /** The maintenance POLICY: what should happen to this index NOW, from
-    * stored evidence only — the fresh `_health` row when one exists
-    * (metadata cost), a bounded re-measure otherwise (which persists,
-    * so the next call is metadata again). Ranked like [[IvfIndex]]'s:
-    * posting-bucket occupancy skew past `maxBucketSkew` advises Rebuild
-    * (structural — the frozen hash layout no longer matches the
-    * term-mass distribution, and compaction cannot fix it); otherwise
-    * dead generation mass / tombstone byte bloat past threshold advises
-    * Compact; otherwise Healthy. */
+  /** The maintenance POLICY ([[IndexAdvice.Tombstoned.advise]]): bucket
+    * occupancy skew past `maxBucketSkew` advises Rebuild (the frozen
+    * hash layout no longer matches the term-mass distribution, and
+    * compaction cannot fix it); otherwise dead generation mass /
+    * tombstone byte bloat past threshold advises Compact; otherwise
+    * Healthy. */
   def maintenanceAdvice(wh: Warehouse, name: String = "text_index",
                         maxDeadFraction: Double = DefaultMaxDeadFraction,
                         maxTombstoneBloat: Double = DefaultMaxTombstoneBloat,
-                        maxBucketSkew: Double = DefaultMaxBucketSkew)
-      : IndexAdvice = {
-    val c = IndexAdvice.census(wh, name) // ONE listing, shared
-    val s = freshSnapshot(wh, name, c)
-      .getOrElse(measureHealth(wh, name, c)).summary
-    val (deadF, delB, datB, skew) = (s._3, s._8, s._9, s._7)
-    if (skew >= maxBucketSkew) IndexAdvice.Rebuild
-    else if (deadF >= maxDeadFraction ||
-        (datB > 0L && delB.toDouble / datB >= maxTombstoneBloat))
-      IndexAdvice.Compact
-    else IndexAdvice.Healthy
-  }
+                        maxBucketSkew: Double = DefaultMaxSkew)
+      : IndexAdvice =
+    advise(wh, name, maxDeadFraction, maxTombstoneBloat, maxBucketSkew)
 
   /** Consult [[maintenanceAdvice]] and ACT on it — the one call a
     * nightly maintenance job needs per text index. Returns the advice
@@ -1237,14 +946,10 @@ object TextIndex {
   def maintain(wh: Warehouse, name: String = "text_index",
                maxDeadFraction: Double = DefaultMaxDeadFraction,
                maxTombstoneBloat: Double = DefaultMaxTombstoneBloat,
-               maxBucketSkew: Double = DefaultMaxBucketSkew,
+               maxBucketSkew: Double = DefaultMaxSkew,
                executeRebuild: Boolean = false)
-      : IndexAdvice = {
-    val a = maintenanceAdvice(wh, name, maxDeadFraction,
-      maxTombstoneBloat, maxBucketSkew)
-    if (a == IndexAdvice.Compact) compact(wh, name)
-    else if (a == IndexAdvice.Rebuild && executeRebuild)
-      rebuild(wh, name, maxBucketSkew)
-    a
-  }
+      : IndexAdvice =
+    maintainWith(wh, name, maxDeadFraction, maxTombstoneBloat,
+      maxBucketSkew, executeRebuild)(
+      compact(wh, name), rebuild(wh, name, maxBucketSkew))
 }

@@ -1,0 +1,89 @@
+package graft.operators
+
+import java.nio.file.Files
+import graft.SparkSpec
+import graft.engine.Warehouse
+import org.apache.spark.sql.Row
+
+/** Pins what [[TextIndex]] leaves on disk and hands back: the v=3
+  * `_health` sidecar layout, the health frames' column list and order,
+  * and the `_deletes` tombstone schema. A change to any of these breaks
+  * every index already written, so it must be deliberate. */
+class TextIndexFormatSpec extends SparkSpec {
+  import spark.implicits._
+
+  private def freshWh =
+    new Warehouse(spark, Files.createTempDirectory("tixfmt").toString)
+
+  private val healthCols = Seq(
+    "live_rows" -> "LongType", "dead_rows" -> "LongType",
+    "dead_fraction" -> "DoubleType", "live_postings" -> "LongType",
+    "max_bucket_postings" -> "LongType", "n_buckets" -> "LongType",
+    "bucket_skew" -> "DoubleType", "deletes_bytes" -> "LongType",
+    "data_bytes" -> "LongType", "n_files" -> "LongType",
+    "census_bytes" -> "LongType")
+
+  private def colsOf(df: org.apache.spark.sql.DataFrame) =
+    df.dtypes.toSeq
+
+  private def build(wh: Warehouse, name: String): Unit =
+    TextIndex.build(wh, (1L to 8L).map(i => (i, s"alpha beta doc$i"))
+      .toDF("doc_id", "text"), "doc_id", "text", name, nBuckets = 8)
+
+  test("a literal v=3 _health body parses to the expected readHealth row") {
+    val wh = freshWh
+    build(wh, "tfmt")
+    val c = IndexAdvice.census(wh, "tfmt")
+    val body =
+      s"""v=3
+         |n_files=${c.nFiles}
+         |census_bytes=${c.totalBytes}
+         |census_mtime=${c.maxMtime}
+         |live_rows=7
+         |dead_rows=3
+         |deletes_bytes=120
+         |data_bytes=4000
+         |buckets=0:2,3:10,5:2,7:2
+         |""".stripMargin
+    IndexAdvice.writeSidecar(wh, s"${wh.dataPath("tfmt")}/_health", body)
+    TextIndex.forgetDriverState()
+    val h = TextIndex.readHealth(wh, "tfmt")
+    assert(h.nonEmpty, "a stamp-matching v=3 body must read as fresh")
+    assert(colsOf(h.get) == healthCols)
+    assert(h.get.collect().toSeq == Seq(Row(7L, 3L, 0.3, 16L, 10L, 4L,
+      2.5, 120L, 4000L, c.nFiles, c.totalBytes)))
+  }
+
+  test("analyzeHealth and readHealth keep their column list and order, " +
+      "and the written sidecar keeps the v=3 key layout") {
+    val wh = freshWh
+    build(wh, "tfmt2")
+    TextIndex.delete(wh, Seq(2L).toDF("doc_id"), "doc_id", "tfmt2")
+    val analyzed = TextIndex.analyzeHealth(wh, "tfmt2")
+    assert(colsOf(analyzed) == healthCols)
+    val read = TextIndex.readHealth(wh, "tfmt2")
+    assert(read.nonEmpty && colsOf(read.get) == healthCols)
+    assert(read.get.collect().toSeq == analyzed.collect().toSeq)
+    val stored = IndexAdvice.readSidecar(wh,
+      s"${wh.dataPath("tfmt2")}/_health").get
+    assert(stored.linesIterator.map(_.takeWhile(_ != '=')).toSeq ==
+      Seq("v", "n_files", "census_bytes", "census_mtime", "live_rows",
+        "dead_rows", "deletes_bytes", "data_bytes", "buckets"))
+    assert(stored.startsWith("v=3\n"))
+    val r = analyzed.head()
+    assert(r.getAs[Long]("live_rows") == 7L &&
+      r.getAs[Long]("dead_rows") == 1L)
+  }
+
+  test("_deletes keeps its (doc_id, cut) schema for delete and reindex") {
+    val wh = freshWh
+    build(wh, "tfmt3")
+    TextIndex.delete(wh, Seq(1L, 2L).toDF("doc_id"), "doc_id", "tfmt3")
+    TextIndex.reindex(wh, Seq((3L, "gamma")).toDF("doc_id", "text"),
+      "doc_id", "text", "tfmt3")
+    val dels = spark.read.parquet(s"${wh.dataPath("tfmt3")}/_deletes")
+    assert(colsOf(dels) == Seq("doc_id" -> "LongType", "cut" -> "LongType"))
+    assert(dels.as[(Long, Long)].collect().toSet ==
+      Set((1L, 1L), (2L, 1L), (3L, 1L)))
+  }
+}
