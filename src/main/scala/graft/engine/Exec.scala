@@ -2,7 +2,7 @@ package graft.engine
 
 import java.util.UUID
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, functions}
 
 /** Eager materialization with a cluster-safe escape hatch.
   *
@@ -52,13 +52,17 @@ object Exec {
     * exactly on both paths; on the durable path nullability may RELAX to
     * nullable (Spark marks every file-scan output nullable) — a value-safe
     * widening, never a narrowing. */
-  def materialize(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val maxLocal = spark.conf
-      .get(MaxLocalBytesKey, DefaultMaxLocalBytes.toString).toLong
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est <= BigInt(maxLocal)) df.localCheckpoint(true)
+  def materialize(df: DataFrame): DataFrame = pin(df, pastLocal(df))
+
+  /** Whether Catalyst's size estimate of `df` is past `maxLocalBytes`. */
+  private def pastLocal(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes > BigInt(df.sparkSession
+      .conf.get(MaxLocalBytesKey, DefaultMaxLocalBytes.toString).toLong)
+
+  private def pin(df: DataFrame, durable: Boolean): DataFrame =
+    if (!durable) df.localCheckpoint(true)
     else {
+      val spark = df.sparkSession
       val path = s"${stagingRoot(spark)}/${UUID.randomUUID()}"
       df.write.parquet(path)
       val p = new Path(path)
@@ -67,27 +71,25 @@ object Exec {
       // column order byte-identical to the localCheckpoint path
       spark.read.schema(df.schema).parquet(path)
     }
-  }
 
   /** [[materialize]] + aggregate evidence in ONE action: the metric
-    * columns ride the pinning job via the Observation API, so the
-    * count()/isEmpty()/head() companions the mutation paths previously
-    * ran as separate (trivial but gap-bounded) Spark jobs cost nothing.
-    * The index-maintenance and admission composites are fixed-overhead
-    * bound at bench scale (~60 jobs for seconds of real work) and every
-    * job carries scheduler+planning latency — this is the §1.2 "don't
-    * run work you can get for free" lever applied to evidence scalars.
+    * columns ride the pinning job via the Observation API, so a
+    * count()/isEmpty()/head() companion costs no Spark job of its own.
     * Metrics are any non-distinct aggregates (counts, sums, collect_set
-    * over bounded domains). Values observe the rows as materialized —
+    * over bounded domains), observed on the rows as materialized —
     * exactly the frame every consumer reads. */
   def materializeObserved(df: DataFrame,
-                          metrics: Map[String, org.apache.spark.sql.Column])
+                          metrics: Map[String, Column])
+      : (DataFrame, Map[String, Any]) = pinObserved(df, metrics)(materialize)
+
+  private def pinObserved(df: DataFrame, metrics: Map[String, Column])
+                         (cut: DataFrame => DataFrame)
       : (DataFrame, Map[String, Any]) = {
     require(metrics.nonEmpty, "materializeObserved needs a metric")
     val obs = new org.apache.spark.sql.Observation(
       s"mat_${UUID.randomUUID().toString.take(8)}")
     val cols = metrics.map { case (n, c) => c.as(n) }.toSeq
-    val pinned = materialize(df.observe(obs, cols.head, cols.tail: _*))
+    val pinned = cut(df.observe(obs, cols.head, cols.tail: _*))
     // PropagateEmptyRelation can prune an observed plan outright (a
     // provably-empty frame), in which case no metric ever lands and
     // obs.get is an empty map — recompute over the PINNED rows (the
@@ -103,9 +105,47 @@ object Exec {
   /** [[materialize]] returning the row count from the SAME job. */
   def materializeCounted(df: DataFrame): (DataFrame, Long) = {
     val (pinned, m) = materializeObserved(df,
-      Map("n" -> org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1))))
+      Map("n" -> functions.count(functions.lit(1))))
     (pinned, m("n").asInstanceOf[Long])
+  }
+
+  /** [[iterate]]'s stop test: stop at the first round whose `metrics`,
+    * observed on its cut, equal the previous round's (`seed` holds the
+    * values observed on `init`'s pin). A loop that runs out of rounds
+    * first throws `IllegalStateException(notConverged)`: a partial
+    * iterate is a wrong answer, not a slow one. */
+  final case class FixedPoint(metrics: Map[String, Column],
+                              seed: Map[String, Any], notConverged: String)
+
+  /** Up to `maxRounds` applications of `step` to `init` — the one place
+    * that decides where an iterate is cut. Every round is pinned except
+    * the last round of a fixed-count loop, which comes back unpinned for
+    * the caller's own action to run: the result plans one round over one
+    * pinned state whatever the round count (uncut, a step that reads its
+    * state twice doubles its plan every round). With `until` every round
+    * is cut, its metrics ride the pin and the loop stops at a fixed point.
+    * The pin medium is chosen once, from `init`: a state keeps one row
+    * per key, while a round's own estimate multiplies its join inputs (no
+    * CBO) and would stage a kilobyte vector to parquet. */
+  def iterate(init: DataFrame, maxRounds: Int,
+              until: Option[FixedPoint] = None)
+             (step: DataFrame => DataFrame): DataFrame = {
+    require(maxRounds >= 0, s"round count must be >= 0, got $maxRounds")
+    val durable = pastLocal(init)
+    val cut = (df: DataFrame) => pin(df, durable)
+    @annotation.tailrec
+    def loop(state: DataFrame, prev: Map[String, Any], round: Int): DataFrame =
+      until match {
+        case None if round == maxRounds => state
+        case None if round + 1 == maxRounds => step(state)
+        case None => loop(cut(step(state)), prev, round + 1)
+        case Some(fp) if round == maxRounds =>
+          throw new IllegalStateException(fp.notConverged)
+        case Some(fp) =>
+          val (next, m) = pinObserved(step(state), fp.metrics)(cut)
+          if (m == prev) next else loop(next, m, round + 1)
+      }
+    loop(init, until.fold(Map.empty[String, Any])(_.seed), 0)
   }
 
   /** [[materialize]] unless `df` is ALREADY pinned rows — a

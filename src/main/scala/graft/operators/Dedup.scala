@@ -722,16 +722,11 @@ object Dedup {
     * mode makes a bigint SUM overflow throw). Two consecutive rounds with
     * equal fingerprints ⇒ equal edge sets (both are deterministic
     * functions of the previous state; 128 hash bits make a collision
-    * astronomically unlikely). ONE tiny aggregate job on checkpointed
-    * edges — no join against the previous state, no second pass.
-    */
-  private def edgeFingerprint(e: DataFrame): (Long, String, String) = {
-    val r = e.agg(
-      count(lit(1)),
-      sum(xxhash64(col("lo"), col("hi")).cast("decimal(38,0)")),
-      sum(xxhash64(col("hi"), col("lo"), lit(7)).cast("decimal(38,0)"))).head()
-    (r.getLong(0), String.valueOf(r.get(1)), String.valueOf(r.get(2)))
-  }
+    * astronomically unlikely). It rides each edge set's pinning job. */
+  private def edgeFingerprint: Map[String, Column] = Map(
+    "n" -> count(lit(1)),
+    "h1" -> sum(xxhash64(col("lo"), col("hi")).cast("decimal(38,0)")),
+    "h2" -> sum(xxhash64(col("hi"), col("lo"), lit(7)).cast("decimal(38,0)")))
 
   /** Connected components over a near-dup pair list — the step that turns
     * verified pairs into duplicate GROUPS (each doc labeled with the min
@@ -746,12 +741,10 @@ object Dedup {
     * O(log d) rounds — hash-min label propagation needs O(d) rounds, which
     * on a pathological chain component is the difference between ~10 and
     * ~10⁶ shuffles. Each round is two groupBy-join phases on the edge key
-    * (high-cardinality, parallel), eagerly checkpointed so lineage stays
-    * constant; convergence detection is a one-row fingerprint aggregate
-    * folded onto the freshly-materialized edges (the former
-    * join-the-previous-labels + count() audit was a full extra job per
-    * iteration). Deterministic: pure min-folds, partitioning-independent.
-    */
+    * (high-cardinality, parallel), run as an [[Exec.iterate]] round that
+    * is cut every time; convergence is the [[edgeFingerprint]] observed
+    * on that cut, so a round costs no job beyond its pin.
+    * Deterministic: pure min-folds, partitioning-independent. */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
                           maxIter: Int = 20,
                           driverEdgeLimit: Long = 1L << 20): DataFrame = {
@@ -761,16 +754,17 @@ object Dedup {
       .distinct().transform(Exec.materialize)
     // canonical undirected edge set (lo < hi), self-loops dropped (a
     // self-pair contributes its node to `nodes`; its label is itself)
-    var edges = input.filter(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("lo"),
-        greatest(col("a"), col("b")).as("hi"))
-      .distinct().transform(Exec.materialize)
-    var fp = edgeFingerprint(edges)
+    val (edges, fp) = Exec.materializeObserved(
+      input.filter(col("a") =!= col("b"))
+        .select(least(col("a"), col("b")).as("lo"),
+          greatest(col("a"), col("b")).as("hi"))
+        .distinct(), edgeFingerprint)
+    val nEdges = fp("n").asInstanceOf[Long]
     // SIZE-GATED fast path (the stats-gated-broadcast pattern): near-dup
     // edge sets are usually minuscule relative to the corpus — a verified
     // duplicate PAIR list, not the documents — and each distributed round
     // below costs ~6 fixed-overhead jobs. When the measured edge count
-    // (already in hand from the fingerprint) fits the driver budget
+    // (observed on the edge pin) fits the driver budget
     // (~16 MB at the 2²⁰ default) and ids are integral, a driver-side
     // union-find answers in microseconds; bigger graphs (or exotic id
     // types) take the O(log d) distributed loop unchanged.
@@ -779,7 +773,7 @@ object Dedup {
            org.apache.spark.sql.types.IntegerType => true
       case _ => false
     }
-    if (fp._1 > 0L && fp._1 <= driverEdgeLimit && integralIds) {
+    if (nEdges > 0L && nEdges <= driverEdgeLimit && integralIds) {
       val es = edges.select(col("lo").cast("long"), col("hi").cast("long"))
         .collect().map(r => (r.getLong(0), r.getLong(1)))
       val parent = scala.collection.mutable.HashMap.empty[Long, Long]
@@ -812,13 +806,12 @@ object Dedup {
       return nodes.join(broadcast(lblDf), Seq("id"), "left")
         .select(col("id"), coalesce(col("label"), col("id")).as("label"))
     }
-    var converged = fp._1 == 0L
-    var i = 0
-    while (!converged && i < maxIter) {
+    // one large-star + small-star round over the canonical edge set
+    def round(e: DataFrame): DataFrame = {
       // large-star: node u hooks every LARGER neighbor v onto
       // m(u) = min(N(u) ∪ {u}); needs both orientations of each edge
-      val sym = edges.select(col("lo").as("u"), col("hi").as("v"))
-        .union(edges.select(col("hi").as("u"), col("lo").as("v")))
+      val sym = e.select(col("lo").as("u"), col("hi").as("v"))
+        .union(e.select(col("hi").as("u"), col("lo").as("v")))
       val mins = sym.groupBy(col("u")).agg(min(col("v")).as("mn"))
       val ls = sym.join(mins, Seq("u"))
         .filter(col("v") > col("u"))
@@ -828,26 +821,21 @@ object Dedup {
       // hooks its smaller neighbors and itself onto the minimum; mn < lo
       // always, so (mn, lo) and (mn, hi) are already canonical
       val mins2 = ls.groupBy(col("hi")).agg(min(col("lo")).as("mn"))
-      val ss = ls.join(mins2, Seq("hi"))
+      ls.join(mins2, Seq("hi"))
         .filter(col("lo") =!= col("mn"))
         .select(col("mn").as("lo"), col("lo").as("hi"))
         .union(mins2.select(col("mn").as("lo"), col("hi")))
         .distinct()
-        .transform(Exec.materialize)
-      val nfp = edgeFingerprint(ss)
-      converged = nfp == fp
-      fp = nfp
-      edges = ss
-      i += 1
     }
     // a silent partial result would give wrong group ids downstream
     // (dropNearDuplicates would keep several "canonical" docs per group)
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponents: not converged after $maxIter rounds — " +
-        "raise maxIter (component depth halves per round, so this needs " +
-        "a graph of depth > 2^maxIter or a bug)")
+    val stars = if (nEdges == 0L) edges else Exec.iterate(edges, maxIter,
+      Some(Exec.FixedPoint(edgeFingerprint, fp,
+        s"connectedComponents: not converged after $maxIter rounds — " +
+          "raise maxIter (component depth halves per round, so this needs " +
+          "a graph of depth > 2^maxIter or a bug)")))(round)
     // stars: every non-center node carries its center as `lo`
-    val lbl = edges.groupBy(col("hi")).agg(min(col("lo")).as("mn"))
+    val lbl = stars.groupBy(col("hi")).agg(min(col("lo")).as("mn"))
       .select(col("hi").as("id"), col("mn").as("label"))
     nodes.join(lbl, Seq("id"), "left")
       .select(col("id"), coalesce(col("label"), col("id")).as("label"))

@@ -28,28 +28,14 @@ import graft.engine.Exec
   * shuffle — contributions combine map-side, so shuffle rows are bounded
   * by |distinct dst per partition|, not |edges|. The edge list and node
   * set materialize ONCE ([[Exec.materialize]] — cluster-safe past the
-  * size threshold) and the rank vector materializes on a fixed cadence
-  * ([[MaterializeEvery]]) to keep lineage depth bounded without paying
-  * one eager checkpoint job per iteration; state per iteration is
+  * size threshold); every loop here runs on [[Exec.iterate]], which cuts
+  * each iterate but the last, so a result's plan is one round over one
+  * pinned state whatever the iteration count. State per iteration is
   * |nodes| rows of 16 bytes, never collected to the driver.
   */
 object Graph {
 
   val Ppm = 1000000L
-
-  /** Materialize every this-many iterates (and rely on the caller's
-    * terminal action for the rest): one eager localCheckpoint JOB per
-    * iteration was the dominant fixed cost of a short power iteration —
-    * the 5-iteration PageRank paid 5 extra driver round-trips to pin
-    * 16-byte-per-node vectors — while a cadence of 4 still bounds
-    * lineage depth (≤ 4 join+agg layers between cuts) for long runs.
-    * Results are identical either way: materialization is an execution
-    * boundary, never a semantic one (iterates are exact integer
-    * functions of the edge set). */
-  private val MaterializeEvery = 4
-
-  private def maybeMaterialize(df: DataFrame, iter: Int): DataFrame =
-    if (iter % MaterializeEvery == 0) Exec.materialize(df) else df
 
   /** Bucketed staging target for the prepared edge list. The default
     * (unstaged) iterate re-exchanges the degree-annotated edge list on
@@ -178,9 +164,10 @@ object Graph {
     * side is exchange-free under `staging`, exactly as [[pageRank]] —
     * only the |nodes|-sized label vector moves), one `(node, label)`
     * count with map-side partials, one argmax agg whose state is each
-    * node's distinct neighbor-label set, then a node-keyed update.
-    * Iterates materialize on the [[MaterializeEvery]] cadence so
-    * lineage depth stays bounded at one checkpoint job per 4 rounds. */
+    * node's distinct neighbor-label set, then a node-keyed update. A
+    * round reads the label vector twice (join and self-vote), so
+    * [[Exec.iterate]]'s per-round cut is what keeps the plan one round
+    * deep instead of doubling per round. */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        iters: Int,
                        staging: Option[EdgeStage] = None): DataFrame = {
@@ -191,16 +178,13 @@ object Graph {
     val sym = e0.select(col("a").as("src"), col("b").as("dst"))
       .union(e0.select(col("b").as("src"), col("a").as("dst")))
     val (ed, nodes) = prepare(sym, "src", "dst", staging)
-    var labels = nodes.withColumn("label", col("node"))
-    for (i <- 1 to iters) {
-      // Neighbor votes come from the edge join; the node's own single
-      // vote unions in AFTER it, straight from the label vector. Order
-      // matters for the plan: a union(ed, self-loops) BEFORE the join
-      // would wrap the staged edge list in a Union node, discard its
-      // bucket-aligned output partitioning, and re-shuffle the full
-      // edge side every round — exactly the exchange staging exists to
-      // avoid. The self-vote row (node, own label) is what the self-
-      // loop would have produced through the join, so results match.
+    Exec.iterate(nodes.withColumn("label", col("node")), iters) { labels =>
+      // Neighbor votes come from the edge join; the node's own vote
+      // unions in AFTER it, straight from the label vector. A
+      // union(ed, self-loops) BEFORE the join would wrap the staged edge
+      // list in a Union, drop its bucket-aligned partitioning and
+      // re-shuffle the whole edge side every round. The self-vote row is
+      // what the self-loop would have produced, so results match.
       val neighborVotes = ed.select(col("src"), col("dst"))
         .join(labels.withColumnRenamed("node", "src"), "src")
         .select(col("dst").as("node"), col("label"))
@@ -208,20 +192,13 @@ object Graph {
         .union(labels.select(col("node"), col("label")))
         .groupBy(col("node"), col("label"))
         .agg(count(lit(1)).as("__c"))
-      // the self-vote row guarantees EVERY label-vector node appears in
-      // `votes` (and neighbor votes only hit endpoint nodes, all of
-      // which the vector carries), so the argmax covers exactly the
-      // node set — the old left-join-back-with-coalesce fallback could
-      // never fire. Dropping it removes one join per round AND the
-      // third reference to the label vector, so the un-materialized
-      // plan between checkpoint cuts grows 2^k instead of 3^k.
-      labels = maybeMaterialize(
-        votes.groupBy("node")
-          .agg(min(struct((-col("__c")).as("__nc"), col("label").as("__l")))
-            .as("__m"))
-          .select(col("node"), col("__m.__l").as("label")), i)
-    }
-    labels.select("node", "label")
+      // the self-vote puts EVERY node in `votes`, so the argmax covers
+      // the node set with no left-join-back fallback
+      votes.groupBy("node")
+        .agg(min(struct((-col("__c")).as("__nc"), col("label").as("__l")))
+          .as("__m"))
+        .select(col("node"), col("__m.__l").as("label"))
+    }.select("node", "label")
   }
 
   /** k-round neighborhood feature propagation — exact integer message
@@ -253,17 +230,16 @@ object Graph {
         col(featCol).cast("long").as("h"))
       .na.drop()
       .groupBy("node").agg(sum(col("h")).as("h"))
-    var h = Exec.materialize(nodes.join(f, Seq("node"), "left")
+    val h0 = Exec.materialize(nodes.join(f, Seq("node"), "left")
       .select(col("node"), coalesce(col("h"), lit(0L)).as("h")))
-    for (i <- 1 to iters) {
+    Exec.iterate(h0, iters) { h =>
       val msg = ed
         .join(h.withColumnRenamed("node", "src"), "src")
         .groupBy(col("dst").as("node"))
         .agg(sum(col("h")).as("__in"))
-      h = maybeMaterialize(nodes.join(msg, Seq("node"), "left")
-        .select(col("node"), coalesce(col("__in"), lit(0L)).as("h")), i)
+      nodes.join(msg, Seq("node"), "left")
+        .select(col("node"), coalesce(col("__in"), lit(0L)).as("h"))
     }
-    h
   }
 
   /** Shared edge/node preparation: dropped-null distinct edges with their
@@ -292,27 +268,22 @@ object Graph {
   }
 
   /** The power-iteration core: `rank' = base(n) + damping · Σ inbound
-    * (rank div outdeg) div 1e6`, materializing every
-    * [[MaterializeEvery]]-th iterate so lineage depth stays bounded.
-    * `based` carries `(node, __base)`. */
+    * (rank div outdeg) div 1e6`, one [[Exec.iterate]] round per
+    * iteration. `based` carries `(node, __base)`. */
   private def iterate(ed: DataFrame, based: DataFrame, r0: DataFrame,
                       iters: Int, dampingPpm: Long): DataFrame = {
-    require(iters >= 0, s"iteration count must be >= 0, got $iters")
     require(dampingPpm >= 0 && dampingPpm <= Ppm,
       s"damping must sit in [0, $Ppm] ppm, got $dampingPpm")
-    var ranks = r0
-    for (i <- 1 to iters) {
+    Exec.iterate(r0, iters) { ranks =>
       val contrib = ed
         .join(ranks.withColumnRenamed("node", "src"), "src")
         .groupBy(col("dst").as("node"))
         .agg(sum(expr("rank_ppm div __deg")).as("__in"))
-      ranks = maybeMaterialize(
-        based.join(contrib, Seq("node"), "left")
-          .select(col("node"),
-            (col("__base") +
-              expr(s"($dampingPpm * coalesce(__in, 0L)) div $Ppm"))
-              .as("rank_ppm")), i)
-    }
-    ranks.select(col("node"), col("rank_ppm"))
+      based.join(contrib, Seq("node"), "left")
+        .select(col("node"),
+          (col("__base") +
+            expr(s"($dampingPpm * coalesce(__in, 0L)) div $Ppm"))
+            .as("rank_ppm"))
+    }.select(col("node"), col("rank_ppm"))
   }
 }

@@ -105,6 +105,30 @@ object IndexAdvice {
   private[operators] def shufflePartitions(wh: Warehouse): Int =
     wh.spark.conf.get("spark.sql.shuffle.partitions").toInt
 
+  /** Read-through for a per-version artifact cache keyed by a path inside
+    * an index version dir. The artifacts are immutable within a version,
+    * so `load` runs once per version dir; a rebuild resolves to a new dir
+    * and therefore a fresh entry. BOUNDED: inserting a key first evicts
+    * the same table's retired-version keys (its other keys under
+    * `…/_versions/`), so a long-lived driver that rebuilds or compacts
+    * many indexes never leaks entries. The eviction runs outside any
+    * compute function, so the map never mutates re-entrantly; a racing
+    * thread at worst re-loads one bounded artifact. */
+  private[operators] def versionCached[V <: AnyRef](
+      cache: java.util.concurrent.ConcurrentHashMap[String, V],
+      key: String)(load: => V): V = {
+    val hit = cache.get(key)
+    if (hit != null) hit
+    else {
+      val v = load
+      val i = key.indexOf("/_versions/")
+      val prefix = if (i < 0) key else key.substring(0, i) + "/_versions/"
+      cache.keySet.removeIf(k => k != key && k.startsWith(prefix))
+      cache.put(key, v)
+      v
+    }
+  }
+
   /** Partition count for a metadata-scale companion write (tombstones,
     * per-batch doclen rows): ONE file while the set is small — these
     * dirs are listed by every search/probe, so a file per shuffle

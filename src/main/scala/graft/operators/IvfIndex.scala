@@ -65,8 +65,8 @@ object IvfIndex extends IndexAdvice.Tombstoned[IvfHealth]("id") {
     * own id column (build/buildPq select the id first). */
   override protected def existingIds(wh: Warehouse,
                                      name: String): DataFrame = {
-    val idName = wh.read(name).columns.head
-    wh.read(name).select(col(idName).as("id"))
+    val df = wh.read(name)
+    df.select(col(df.columns.head).as("id"))
   }
 
   /** The probe-scoring join: pruned index entries × per-cell probe
@@ -124,10 +124,9 @@ object IvfIndex extends IndexAdvice.Tombstoned[IvfHealth]("id") {
   override protected def foldDeletes(wh: Warehouse, name: String,
                                      pre: IvfHealth,
                                      tomb: DataFrame): IvfHealth = {
-    val idName = wh.read(name).columns.head
+    val df = wh.read(name)
     val dead = liveOnly(wh, wh.dataPath(name),
-        wh.read(name).select(col(idName).as("id"), col("cell"),
-          col("seq")))
+        df.select(col(df.columns.head).as("id"), col("cell"), col("seq")))
       .join(tomb, Seq("id"), "left_semi")
       .groupBy(col("cell")).agg(count(lit(1)).as("n")).collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -466,9 +465,7 @@ object IvfIndex extends IndexAdvice.Tombstoned[IvfHealth]("id") {
     * CACHED per version dir: the artifacts are immutable within a
     * version (build writes them, compact file-copies them), so each
     * probe/append re-collecting them as Spark jobs was pure fixed
-    * overhead on the serving path. Bounded like the layout cache —
-    * inserting a version's entry evicts the same table's
-    * retired-version keys, so long-lived drivers never leak entries. */
+    * overhead on the serving path ([[IndexAdvice.versionCached]]). */
   private val centsCache = new java.util.concurrent.ConcurrentHashMap[
     String, Seq[Seq[Double]]]()
   private val booksCache = new java.util.concurrent.ConcurrentHashMap[
@@ -476,56 +473,31 @@ object IvfIndex extends IndexAdvice.Tombstoned[IvfHealth]("id") {
   private val rotCache = new java.util.concurrent.ConcurrentHashMap[
     String, Seq[Seq[Double]]]()
 
-  /** Insert evicting the same table's other (retired-version) keys —
-    * run outside any compute-function so the map never mutates
-    * re-entrantly; a racing thread at worst re-reads a bounded
-    * artifact. */
-  private def cachePut[V](cache: java.util.concurrent.ConcurrentHashMap[
-      String, V], key: String, v: V): V = {
-    val i = key.indexOf("/_versions/")
-    val prefix =
-      if (i < 0) key else key.substring(0, i) + "/_versions/"
-    val it = cache.keySet.iterator
-    while (it.hasNext) {
-      val k = it.next()
-      if (k != key && k.startsWith(prefix)) it.remove()
-    }
-    cache.put(key, v)
-    v
-  }
-
-  private def loadCentroids(wh: Warehouse, vdir: String): Seq[Seq[Double]] = {
-    val hit = centsCache.get(vdir)
-    if (hit != null) hit
-    else cachePut(centsCache, vdir,
+  private def loadCentroids(wh: Warehouse, vdir: String): Seq[Seq[Double]] =
+    IndexAdvice.versionCached(centsCache, vdir) {
       wh.spark.read.parquet(s"$vdir/_centroids")
         .orderBy("cell").select("centroid")
-        .collect().map(_.getSeq[Double](0): Seq[Double]).toSeq)
-  }
+        .collect().map(_.getSeq[Double](0): Seq[Double]).toSeq
+    }
 
-  private def loadBooks(wh: Warehouse, vdir: String): Seq[Seq[Seq[Double]]] = {
-    val hit = booksCache.get(vdir)
-    if (hit != null) hit
-    else cachePut(booksCache, vdir,
+  private def loadBooks(wh: Warehouse, vdir: String): Seq[Seq[Seq[Double]]] =
+    IndexAdvice.versionCached(booksCache, vdir) {
       wh.spark.read.parquet(s"$vdir/_codebooks")
         .orderBy("sub", "idx").collect()
         .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
         .map(_._2.sortBy(_.getInt(1))
-          .map(_.getSeq[Double](2): Seq[Double]).toSeq))
-  }
+          .map(_.getSeq[Double](2): Seq[Double]).toSeq)
+    }
 
-  private def loadRotation(wh: Warehouse, vdir: String): Seq[Seq[Double]] = {
-    val hit = rotCache.get(vdir)
-    if (hit != null) hit
-    else cachePut(rotCache, vdir, {
+  private def loadRotation(wh: Warehouse, vdir: String): Seq[Seq[Double]] =
+    IndexAdvice.versionCached(rotCache, vdir) {
       val rotPath = new org.apache.hadoop.fs.Path(s"$vdir/_rotation")
       if (!rotPath.getFileSystem(wh.spark.sessionState.newHadoopConf())
             .exists(rotPath)) Nil // absence ≡ no rotation — cacheable
       else wh.spark.read.parquet(rotPath.toString)
         .orderBy("row").select("coeffs")
         .collect().map(_.getSeq[Double](0): Seq[Double]).toSeq
-    })
-  }
+    }
 
   /** [[append]] for the coded layout: add vectors to a PQ index WITHOUT
     * retraining. The batch is encoded against the CURRENT version's

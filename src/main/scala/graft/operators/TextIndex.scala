@@ -192,16 +192,11 @@ object TextIndex extends IndexAdvice.Tombstoned[TextHealth]("doc_id") {
     out
   }
 
-  /** Per-version layout cache: the bucket count is IMMUTABLE within an
-    * index version (build writes it once, compact/rebuild write the new
-    * version's), so the one-row `_layout` read happens once per
-    * resolved version dir — never a Spark job per search on the hot
-    * path. Keyed by the version-dir path: a rebuild resolves to a new
-    * dir and therefore a fresh entry. BOUNDED: inserting a version's
-    * entry evicts the same table's retired-version keys (only the
-    * current version's entry is ever consulted again), so a long-lived
-    * driver rebuilding/compacting many indexes never leaks cache
-    * entries. */
+  /** Per-version layout cache ([[IndexAdvice.versionCached]]): the
+    * bucket count is IMMUTABLE within an index version (build writes it
+    * once, compact/rebuild write the new version's), so the one-row
+    * `_layout` read happens once per resolved version dir — never a
+    * Spark job per search on the hot path. */
   private val layoutCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
@@ -209,30 +204,13 @@ object TextIndex extends IndexAdvice.Tombstoned[TextHealth]("doc_id") {
     * predates the `_layout` companion), cached per version dir. */
   private def layoutOf(wh: Warehouse, name: String): Long = {
     val key = s"${wh.dataPath(name)}/_layout"
-    val cached = layoutCache.get(key)
-    if (cached != null) cached.longValue()
-    else {
+    IndexAdvice.versionCached(layoutCache, key) {
       val lp = new Path(key)
-      val v: Long =
+      java.lang.Long.valueOf(
         if (!fs(wh, lp).exists(lp)) -1L
         else wh.spark.read.parquet(key)
-          .select(col("n_buckets")).head().getLong(0)
-      // evict the same table's other (retired-version) keys before
-      // inserting — the eviction runs outside any compute-function so
-      // the map is never mutated re-entrantly; a racing thread at worst
-      // re-reads one one-row parquet
-      val prefix = key.indexOf("/_versions/") match {
-        case -1 => key
-        case i => key.substring(0, i) + "/"
-      }
-      val it = layoutCache.keySet.iterator
-      while (it.hasNext) {
-        val k = it.next()
-        if (k != key && k.startsWith(prefix)) it.remove()
-      }
-      layoutCache.put(key, v)
-      v
-    }
+          .select(col("n_buckets")).head().getLong(0))
+    }.longValue()
   }
 
   /** Resolve the bucket count every search/append/reindex routes

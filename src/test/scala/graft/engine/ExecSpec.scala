@@ -129,4 +129,39 @@ class ExecSpec extends SparkSpec {
       spark.conf.unset(Exec.StagingDirKey)
     }
   }
+
+  test("iterate: a fixed-count loop cuts every round but the last; a " +
+      "fixed-point loop cuts every round, stops where the metrics repeat, " +
+      "and throws when it runs out of rounds first") {
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    import org.apache.spark.sql.execution.LogicalRDD
+    val init = Seq(0L, 10L).toDF("v")
+    val inc = (df: org.apache.spark.sql.DataFrame) =>
+      df.select((col("v") + 1).as("v"))
+    assert(Exec.iterate(init, 0)(inc) eq init)
+    val five = Exec.iterate(init, 5)(inc)
+    assert(five.collect().map(_.getLong(0)).toSet == Set(5L, 15L))
+    // the last round is left for the caller's action: one step over a pin
+    five.queryExecution.analyzed match {
+      case p: Project => assert(p.child.isInstanceOf[LogicalRDD], p)
+      case other => fail(s"last round was pinned: $other")
+    }
+    // capped at 3: rounds 1..3 change max(v), round 4 repeats it
+    var rounds = 0
+    val capped = (df: org.apache.spark.sql.DataFrame) => {
+      rounds += 1
+      df.select(least(col("v") + 1, lit(3L)).as("v"))
+    }
+    val stop = Exec.FixedPoint(Map("mx" -> max(col("v"))), Map("mx" -> 0L),
+      "no fixed point")
+    val fixed = Exec.iterate(Seq(0L).toDF("v"), 20, Some(stop))(capped)
+    assert(rounds == 4)
+    assert(fixed.queryExecution.analyzed.isInstanceOf[LogicalRDD])
+    assert(fixed.collect().map(_.getLong(0)).toSeq == Seq(3L))
+    rounds = 0
+    val e = intercept[IllegalStateException] {
+      Exec.iterate(Seq(0L).toDF("v"), 2, Some(stop))(capped)
+    }
+    assert(e.getMessage == "no fixed point" && rounds == 2)
+  }
 }

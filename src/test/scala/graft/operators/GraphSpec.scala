@@ -233,6 +233,34 @@ class GraphSpec extends SparkSpec {
     assert(staged == got)
   }
 
+  test("plan bound: the result is one round over one pinned state for " +
+      "every iteration count") {
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val rnd = new scala.util.Random(5)
+    val edges = Seq.fill(120)((rnd.nextInt(20).toLong, rnd.nextInt(20).toLong))
+      .filter(e => e._1 != e._2).toDF("s", "d")
+    val feats = (0L until 20L).map(n => (n, n % 3)).toDF("n", "x")
+    val ops: Seq[(String, Int => org.apache.spark.sql.DataFrame)] = Seq(
+      "pageRank" -> (k => Graph.pageRank(edges, "s", "d", k)),
+      "labelPropagation" -> (k => Graph.labelPropagation(edges, "s", "d", k)),
+      "propagate" -> (k => Graph.propagate(edges, "s", "d", feats, "n", "x", k)))
+    for ((name, run) <- ops) {
+      // (Join nodes, leaf scans): the leaves are the pinned edge list, node
+      // set and state references one round reads, so an equal count for
+      // every k bounds the state references to one round's
+      val shapes = (1 to 6).map { k =>
+        val plan = run(k).queryExecution.optimizedPlan
+        k -> (plan.collect { case j: Join => j }.size, plan.collectLeaves().size)
+      }
+      val oneRound = shapes.head._2
+      assert(oneRound._1 > 0, s"$name: no join in one round")
+      shapes.foreach { case (k, shape) =>
+        assert(shape == oneRound,
+          s"$name k=$k: (joins, leaves) $shape, one round has $oneRound")
+      }
+    }
+  }
+
   test("null endpoints drop their edge; node set is surviving endpoints") {
     val edges = Seq((java.lang.Long.valueOf(1L), java.lang.Long.valueOf(2L)),
       (null.asInstanceOf[java.lang.Long], java.lang.Long.valueOf(3L)))
