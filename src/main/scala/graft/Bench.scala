@@ -1,6 +1,4 @@
 package graft
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: times every SparkEntry query at the given SF and
   * prints ONE JSON line. The action is a noop-sink write, which forces
@@ -9,10 +7,10 @@ import org.apache.spark.sql.SparkSession
   * expression benchmarks would then time just scan+count). Failures are
   * reported per query (value -1 + message), never silently timed.
   *
-  * Every run also archives per-query stage evidence (task counts, stage
-  * task-time, shuffle bytes) to `docs/BENCH_STAGES.txt` — wall totals on
-  * a shared box swing ±2×, stage metrics don't, so a reviewer can tell
-  * noise from regression without rerunning.
+  * Every run also writes per-query stage evidence (task counts, stage
+  * task-time, shuffle bytes) beside the JSON file, as `<out>_stages.txt`
+  * — wall totals on a shared box swing ±2×, stage metrics don't, so
+  * noise can be told from regression without rerunning.
   *
   * The JSON is SELF-ADJUDICATING: it carries per-query `/proc/loadavg`
   * (1-min, sampled as each query starts) and task-seconds beside each
@@ -33,26 +31,9 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.engine.SessionDefaults.withLocalIo(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // pinned so the events NTZ→TZ normalization (Td.normalizeEventTs)
-      // yields identical instants regardless of box timezone
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // (stageId, tasks, taskTimeMs, shufWriteB, shufReadB)
-    val stages =
-      new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, Long, Long, Long)]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val m = e.stageInfo.taskMetrics
-        stages.add((e.stageInfo.stageId, e.stageInfo.numTasks,
-          m.executorRunTime, m.shuffleWriteMetrics.bytesWritten,
-          m.shuffleReadMetrics.localBytesRead + m.shuffleReadMetrics.remoteBytesRead))
-      }
-    })
+    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
+    val spark = graft.engine.SessionDefaults.localSession(cpus)
+    val rec = new graft.tools.Profile.Recorder(spark.sparkContext)
     // warm JVM/codegen/parquet/shuffle/window/text-expression paths so the
     // alphabetically-first queries aren't charged session startup — warmup
     // work is explicitly untimed
@@ -89,26 +70,25 @@ object Bench {
     val evidence = scala.collection.mutable.LinkedHashMap
       .empty[String, (Double, Double)]
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      stages.clear()
+      rec.clear()
       val ld = load1()
       val t0 = System.nanoTime()
       try {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         val sec = (System.nanoTime() - t0) / 1e9
-        // drain the async listener bus BEFORE reading (and before the next
-        // query's clear()) — the timing above is already captured, so the
-        // pause costs process wall, not query time
-        Thread.sleep(200)
-        val all = stages.toArray(Array.empty[(Int, Int, Long, Long, Long)])
+        // read after the timing: the recorder drains the listener bus
+        val all = rec.stages
         def mb(b: Long) = b / 1024.0 / 1024.0
-        val taskSec = all.map(_._3).sum / 1000.0
+        val taskSec = all.map(_.runMs).sum / 1000.0
         evidence += name -> (ld, taskSec)
         sidecar ++= f"===== $name wall=$sec%.2fs stages=${all.length} " +
           f"taskSec=$taskSec%.1f load1=$ld%.2f " +
-          f"shufW=${mb(all.map(_._4).sum)}%.1fMB shufR=${mb(all.map(_._5).sum)}%.1fMB\n"
-        all.sortBy(-_._3).take(4).foreach { case (id, tasks, run, sw, sr) =>
-          sidecar ++= f"  stage=$id%-5d tasks=$tasks%-3d taskTime=${run / 1000.0}%8.2fs " +
-            f"shufW=${mb(sw)}%7.1fMB shufR=${mb(sr)}%7.1fMB\n"
+          f"shufW=${mb(all.map(_.shuffleWriteB).sum)}%.1fMB " +
+          f"shufR=${mb(all.map(_.shuffleReadB).sum)}%.1fMB\n"
+        all.sortBy(-_.runMs).take(4).foreach { st =>
+          sidecar ++= f"  stage=${st.id}%-5d tasks=${st.tasks}%-3d " +
+            f"taskTime=${st.runMs / 1000.0}%8.2fs " +
+            f"shufW=${mb(st.shuffleWriteB)}%7.1fMB shufR=${mb(st.shuffleReadB)}%7.1fMB\n"
         }
         name -> sec
       } catch {
@@ -118,10 +98,9 @@ object Bench {
           // the sidecar matters. task_sec sums whatever stages completed
           // before the throw; -1 marks "none completed" apart from a
           // legitimately-zero trivial query.
-          Thread.sleep(200)
-          val done = stages.toArray(Array.empty[(Int, Int, Long, Long, Long)])
+          val done = rec.stages
           val taskSec =
-            if (done.isEmpty) -1.0 else done.map(_._3).sum / 1000.0
+            if (done.isEmpty) -1.0 else done.map(_.runMs).sum / 1000.0
           evidence += name -> (ld, taskSec)
           errors += name -> s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}"
           name -> -1.0
@@ -129,7 +108,8 @@ object Bench {
     }
     try {
       java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("docs/BENCH_STAGES.txt"), sidecar.toString)
+        java.nio.file.Paths.get(out.stripSuffix(".json") + "_stages.txt"),
+        sidecar.toString)
     } catch { case _: Throwable => () } // bench result must not die on a doc write
     def jq(s: String): String = "\"" + s.flatMap {
       case '"' => "\\\""
@@ -159,10 +139,7 @@ object Bench {
     // ALSO write the JSON to a file: stdout scraping truncated past rounds'
     // artifacts (BENCH_r03.json stopped at 60/85 queries) — the file is the
     // complete, parseable record
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")),
-      json + "\n")
+    try java.nio.file.Files.writeString(java.nio.file.Paths.get(out), json + "\n")
     catch { case _: Throwable => () } // bench result must not die on a doc write
     spark.stop()
     if (errors.nonEmpty) sys.exit(1)

@@ -1,19 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local smoke runner mirroring the driver's t1 check: SparkEntry.entry
   * must return >0 rows on sf0.001.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = graft.engine.SessionDefaults.withLocalIo(SparkSession.builder())
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.SessionDefaults.localSession("8")
     val df = SparkEntry.entry(spark)
     val n = df.count()
     df.show(5, truncate = false)

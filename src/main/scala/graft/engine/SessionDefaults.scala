@@ -30,4 +30,20 @@ object SessionDefaults {
     else b2.config("spark.hadoop.fs.file.impl",
       classOf[FastLocalFs].getName)
   }
+
+  /** The session every local main runs on: [[withLocalIo]] at
+    * `local[cores]` with as many shuffle partitions, the UTC session zone
+    * (the events NTZ→TZ normalization in `Td` then yields the same
+    * instants on any box) and no UI. `conf` is applied last. */
+  def localSession(cores: String, logLevel: String = "WARN",
+                   conf: Seq[(String, String)] = Nil): SparkSession = {
+    val b = withLocalIo(SparkSession.builder()).master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+    val spark = conf.foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }
+      .getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
 }

@@ -158,10 +158,7 @@ object AnnRecall {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = graft.engine.SessionDefaults.withLocalIo(SparkSession.builder()).master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.engine.SessionDefaults.localSession("32", "ERROR")
     if (args.headOption.contains("rerank-curve")) rerankCurve(spark)
     else run(spark, assertFloor = true)
     spark.stop()

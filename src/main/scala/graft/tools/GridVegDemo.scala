@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.engine._
 
 /** Drives the gridVeg wrangle pipelines end-to-end through the public
@@ -9,11 +8,7 @@ import graft.engine._
   */
 object GridVegDemo {
   def main(args: Array[String]): Unit = {
-    val spark = graft.engine.SessionDefaults.withLocalIo(SparkSession.builder()).master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionDefaults.localSession("8")
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("gridveg_wh").toString
     val wh = new Warehouse(spark, root)

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.SparkEntry
@@ -34,30 +33,14 @@ object ScaleSweep {
     * shufWriteB, shufReadB, inputB). */
   type StageRow = (Int, Int, Long, Long, Long, Long, Long)
 
-  /** Per-stage telemetry collector — the sweep's measurement core,
-    * factored out so the single-task GATE below is spec-testable. */
+  /** The sweep's measurement core: the stages [[Profile.Recorder]] saw,
+    * as rows the single-task GATE below reads. */
   final class StageAudit(sc: org.apache.spark.SparkContext) {
-    private val q = new java.util.concurrent.ConcurrentLinkedQueue[StageRow]()
-    private val listener = new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val i = e.stageInfo
-        val wall = (for { s <- i.submissionTime; c <- i.completionTime }
-          yield c - s).getOrElse(-1L)
-        val m = i.taskMetrics
-        q.add((i.stageId, i.numTasks, m.executorRunTime, wall,
-          m.shuffleWriteMetrics.bytesWritten,
-          m.shuffleReadMetrics.localBytesRead +
-            m.shuffleReadMetrics.remoteBytesRead,
-          m.inputMetrics.bytesRead))
-      }
-    }
-    sc.addSparkListener(listener)
-    def clear(): Unit = q.clear()
-    def snapshot(): Seq[StageRow] = {
-      Thread.sleep(300) // let the listener bus drain
-      q.toArray(Array.empty[StageRow]).toSeq
-    }
-    def detach(): Unit = sc.removeSparkListener(listener)
+    private val rec = new Profile.Recorder(sc)
+    def clear(): Unit = rec.clear()
+    def snapshot(): Seq[StageRow] = rec.stages.map(s => (s.id, s.tasks,
+      s.runMs, s.wallMs, s.shuffleWriteB, s.shuffleReadB, s.inputB))
+    def detach(): Unit = rec.detach()
   }
 
   /** The zero-single-task invariant as a GATE, not prose: stages that ran
@@ -182,11 +165,7 @@ object ScaleSweep {
   def main(args: Array[String]): Unit = {
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = sys.env.getOrElse("SPARK_GRAFT_SCALED_DIR", "/tmp/graft_scaled")
-    val spark = graft.engine.SessionDefaults.withLocalIo(SparkSession.builder()).master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.engine.SessionDefaults.localSession("32", "ERROR")
 
     // the marker carries a generation id: a cached copy built by an older
     // generator (e.g. before customer was scaled) silently measured the
