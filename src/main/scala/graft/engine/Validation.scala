@@ -232,11 +232,12 @@ object Validation {
     * (Unique/RefIntegrity) cannot gate a row in isolation and are
     * rejected loudly rather than half-applied.
     *
-    * Exactly-once on BOTH sinks: each lands through the staging+promote
-    * protocol under the same batch id, so a replayed batch re-promotes
-    * nothing on either side, and a crash between the two promotes
-    * resumes idempotently (the completed side no-ops, the other side
-    * lands whole). The split is evaluated once per batch
+    * Exactly-once on BOTH sinks: each lands through
+    * [[Warehouse.appendStreamBatch]] — schema- and partition-aligned to
+    * its table, staged and promoted — under the same batch id, so a
+    * replayed batch re-promotes nothing on either side, and a crash
+    * between the two promotes resumes idempotently (the completed side
+    * no-ops, the other side lands whole). The split is evaluated once per batch
     * ([[Exec.materialize]]) — the two sinks never re-run the source.
     *
     * Scale: the gate is a map-side projection (same predicates the batch
@@ -258,10 +259,10 @@ object Validation {
       .foreachBatch { (bdf: DataFrame, id: Long) =>
         val tagged = Exec.materialize(
           bdf.withColumn("__viol", violatedRules(rules)))
-        wh.landStreamBatch(
+        wh.appendStreamBatch(
           tagged.filter(size(col("__viol")) === 0).drop("__viol"),
           table, id)
-        wh.landStreamBatch(
+        wh.appendStreamBatch(
           tagged.filter(size(col("__viol")) > 0)
             .withColumn("_violated", concat_ws(",", col("__viol")))
             .withColumn("_batch_id", lit(id))

@@ -6,7 +6,7 @@ import java.time.{ZoneOffset, ZonedDateTime}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, MapType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, MapType, StructField, StructType}
 
 /** Table registry over a parquet directory tree — the Spark stand-in for
   * the reference's BigQuery dataset (SURVEY.md §1.1): named tables,
@@ -330,32 +330,35 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     import spark.implicits._
     val cur = currentVersion(name)
     listVersions(name).map { v =>
-      val files = listDataFiles(new Path(s"${dir(name)}/_versions/$v"))
+      val (nf, bytes) = census(s"${dir(name)}/_versions/$v")
       val ts = java.time.LocalDateTime.parse(v.take(18),
         DateTimeFormatter.ofPattern("yyyyMMdd'T'HHmmssSSS"))
         .atZone(ZoneOffset.UTC)
-      (v, java.sql.Timestamp.from(ts.toInstant), files.size.toLong,
-        files.map(_.getLen).sum, cur.contains(v))
+      (v, java.sql.Timestamp.from(ts.toInstant), nf, bytes, cur.contains(v))
     }.toDF("version", "published_at", "n_files", "bytes", "is_current")
   }
 
-  /** Read a concrete data directory with its `_partitioning` marker
-    * applied (exact schema restore) when one is present, or its
-    * `_evolved_schema` marker (deterministic union schema — footer
-    * sampling would answer with whichever file Spark picked). */
-  private def readPath(p: String): DataFrame =
-    partitioningMarker(p) match {
-      // declared schema: partition values parse as their ORIGINAL types
-      // (no inference), and the select restores the original column order
-      // (partition discovery would move partition columns to the end)
-      case Some((_, schema)) =>
-        spark.read.schema(schema).parquet(p)
-          .select(schema.fieldNames.map(col).toSeq: _*)
-      case None => evolvedSchemaMarker(p) match {
-        case Some(schema) => spark.read.schema(schema).parquet(p)
-        case None => spark.read.parquet(p)
-      }
-    }
+  /** The declared schema of a data directory: its `_partitioning`
+    * marker's (exact schema restore), else its `_evolved_schema` marker's
+    * (deterministic union schema — footer sampling would answer with
+    * whichever file Spark picked); None leaves the schema to inference. */
+  private def declaredSchema(p: String): Option[StructType] =
+    partitioningMarker(p).map(_._2).orElse(evolvedSchemaMarker(p))
+
+  /** Read a concrete data directory — or only `files` of it, with
+    * partition values restored via basePath — under its
+    * [[declaredSchema]]: partition values parse as their ORIGINAL types
+    * (no inference: `code=042` stays the string "042"), and the select
+    * restores the declared column order (partition discovery would move
+    * partition columns to the end). */
+  private def readPath(p: String, files: Seq[String] = Nil): DataFrame = {
+    val declared = declaredSchema(p)
+    val reader = declared.fold(spark.read)(spark.read.schema)
+    val df =
+      if (files.isEmpty) reader.parquet(p)
+      else reader.option("basePath", p).parquet(files: _*)
+    declared.fold(df)(s => df.select(s.fieldNames.map(col).toSeq: _*))
+  }
 
   /** Audit diff between two published versions of a table: one row per
     * key that was `added`, `removed`, or `changed` (same key, any non-key
@@ -574,8 +577,7 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     val partMarker = partitioningMarker(p)
     // the marker (not a sampled footer) is the source of truth once the
     // table has ever evolved — footer sampling is nondeterministic
-    val expected = partMarker.map(_._2)
-      .orElse(evolvedSchemaMarker(p)).getOrElse(schemaOf(name))
+    val expected = declaredSchema(p).getOrElse(schemaOf(name))
     val (out, union) = evolveAlign(df, expected, name)
     partMarker match {
       case Some((parts, _)) =>
@@ -600,28 +602,42 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     if (spark.sessionState.conf.caseSensitiveAnalysis) n
     else n.toLowerCase(java.util.Locale.ROOT)
 
-  /** The shared evolution core: reject ambiguous incoming names and type
-    * drift, align known columns to the table's canonical names (absent
-    * ones null-fill), append genuinely-new columns after them, and return
-    * the aligned frame plus the union schema (everything nullable — any
-    * column may be absent from some files). */
+  /** The column matcher [[alignToSchema]] and [[evolveAlign]] share:
+    * `df`'s fields by canonical name, after rejecting incoming names that
+    * collide under the session's resolution rule and any table column
+    * whose incoming type differs beyond nullability — parquet round-trips
+    * relax containsNull, so a strict compare would reject frames the
+    * engine itself just built (toDF array<float> vs the read-back table).
+    * What a missing or extra column means is each caller's own rule. */
+  private def matchColumns(df: DataFrame, expected: StructType,
+                           verb: String, name: String): Map[String, StructField] = {
+    val byCanon = df.schema.fields.groupBy(f => canonName(f.name))
+    val dups = byCanon.values.filter(_.length > 1).map(_.map(_.name).toSeq)
+    require(dups.isEmpty,
+      s"$verb to '$name': ambiguous incoming columns under the session's " +
+        s"name resolution — ${dups.toSeq}")
+    val incoming = byCanon.map { case (k, fs) => k -> fs.head }
+    val drift = expected.fields.flatMap { f =>
+      incoming.get(canonName(f.name)).filterNot(in => DataType.equalsStructurally(
+        in.dataType, f.dataType, ignoreNullability = true)).map(in =>
+        s"${f.name} (table ${f.dataType.simpleString} vs incoming " +
+          s"${in.dataType.simpleString})")
+    }
+    require(drift.isEmpty, s"$verb to '$name': type drift in ${drift.toSeq}")
+    incoming
+  }
+
+  /** The evolution core: align known columns to the table's canonical
+    * names (absent ones null-fill), append genuinely-new columns after
+    * them, and return the aligned frame plus the union schema (everything
+    * nullable — any column may be absent from some files). */
   private def evolveAlign(df: DataFrame, expected: StructType,
                           name: String): (DataFrame, StructType) = {
-    val byCanon = df.schema.fields.groupBy(f => canonName(f.name))
-    val dups = byCanon.collect { case (_, fs) if fs.length > 1 => fs.map(_.name).toSeq }
-    require(dups.isEmpty,
-      s"appendEvolved to '$name': ambiguous incoming columns — ${dups.toSeq}")
-    val drift = expected.fields.filter(f =>
-      byCanon.get(canonName(f.name)).exists(_.head.dataType != f.dataType))
-    require(drift.isEmpty,
-      s"appendEvolved to '$name': type drift in ${drift.map(f =>
-        s"${f.name} (table ${f.dataType.simpleString} vs incoming " +
-          s"${byCanon(canonName(f.name)).head.dataType.simpleString})").toSeq} — " +
-        "evolution adds columns, it never changes a type")
+    val incoming = matchColumns(df, expected, "appendEvolved", name)
     val expectedCanon = expected.fields.map(f => canonName(f.name)).toSet
     val aligned = expected.fields.map { f =>
-      byCanon.get(canonName(f.name)) match {
-        case Some(in) => col(in.head.name).as(f.name)
+      incoming.get(canonName(f.name)) match {
+        case Some(in) => col(in.name).as(f.name)
         case None => lit(null).cast(f.dataType).as(f.name)
       }
     }
@@ -697,53 +713,26 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     spark.read.option("mergeSchema", "true").parquet(dataPath(name))
 
   /** Validate + align an incoming frame against a table schema: names
-    * resolve per the session's case-sensitivity rule, missing/extra
-    * columns and type drift are rejected BEFORE any write (parquet would
-    * happily accept a drifted file and every later scan of the table
-    * would fail or silently misread), and the select re-orders to the
-    * table's canonical names. Shared by batch [[append]] and every
-    * [[streamingAppend]] micro-batch. */
+    * and types match through [[matchColumns]], missing/extra columns are
+    * rejected BEFORE any write (parquet would happily accept a drifted
+    * file and every later scan of the table would fail or silently
+    * misread), and the select re-orders to the table's canonical names.
+    * Shared by batch [[append]] and every streamed micro-batch. */
   private def alignToSchema(df: DataFrame, expected: StructType,
                             name: String): DataFrame = {
-    val got = df.schema
-    // name matching follows the session's resolution rule — Spark is
-    // case-insensitive by default, so a column differing only in case
-    // must align, not be rejected as missing+unexpected — ONE shared
-    // canonicalization rule for append and appendEvolved alike
-    def canon(n: String) = canonName(n)
-    val byCanon = got.fields.groupBy(f => canon(f.name))
-    val dups = byCanon.collect { case (_, fs) if fs.length > 1 => fs.map(_.name).toSeq }
-    require(dups.isEmpty,
-      s"append to '$name': ambiguous incoming columns under case-insensitive " +
-        s"resolution — ${dups.toSeq}")
-    val missing = expected.fields.map(_.name)
-      .filterNot(n => byCanon.contains(canon(n)))
-    val expectedCanon = expected.fields.map(f => canon(f.name)).toSet
-    val extra = got.fieldNames.filterNot(n => expectedCanon.contains(canon(n)))
+    val incoming = matchColumns(df, expected, "append", name)
+    val missing = expected.fieldNames
+      .filterNot(n => incoming.contains(canonName(n)))
+    val expectedCanon = expected.fieldNames.map(canonName).toSet
+    val extra = df.columns.filterNot(n => expectedCanon.contains(canonName(n)))
     require(missing.isEmpty && extra.isEmpty,
       s"append to '$name': schema mismatch — missing ${missing.toSeq}, " +
         s"unexpected ${extra.toSeq}")
-    def incoming(f: org.apache.spark.sql.types.StructField) =
-      byCanon(canon(f.name)).head
-    // nullability-tolerant comparison: a batch whose array elements (or
-    // nested fields) are declared non-null writes safely into a table
-    // that ALLOWS nulls there — parquet round-trips relax containsNull,
-    // so strict equality would reject every append of a frame the engine
-    // itself just built (e.g. toDF array<float> vs the read-back table)
-    val drift = expected.fields.filter(f =>
-      !org.apache.spark.sql.types.DataType.equalsStructurally(
-        incoming(f).dataType, f.dataType, ignoreNullability = true))
-    require(drift.isEmpty,
-      s"append to '$name': type drift in ${drift.map(f =>
-        s"${f.name} (table ${f.dataType.simpleString} vs " +
-          s"incoming ${incoming(f).dataType.simpleString})").toSeq}")
     // select by the INCOMING name, write under the table's canonical name
-    df.select(expected.fields.map(f => col(incoming(f).name).as(f.name)).toSeq: _*)
+    df.select(expected.fields.map(f =>
+      col(incoming(canonName(f.name)).name).as(f.name)).toSeq: _*)
   }
 
-  /** True iff the session catalog holds a BUCKETED table named `name`
-    * whose location lives under this warehouse's directory for it
-    * (versioned bucketed tables point INSIDE `<table>/_versions/`). */
   /** Data files under `base`, skipping any file whose RELATIVE path
     * contains a hidden (`_`/`.`-prefixed) segment — a basename-only check
     * would count a committer's `_temporary/.../part-*.parquet` files, or
@@ -766,6 +755,9 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     out.toSeq
   }
 
+  /** True iff the session catalog holds a BUCKETED table named `name`
+    * whose location lives under this warehouse's directory for it
+    * (versioned bucketed tables point INSIDE `<table>/_versions/`). */
   private def isBucketedCatalogTable(name: String): Boolean =
     try {
       if (!spark.catalog.tableExists(name)) false
@@ -786,14 +778,6 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     ()
   }
 
-  /** Scale extension: bucketed table write. Rows are pre-shuffled into
-    * `numBuckets` files per bucket key and sorted within buckets, so every
-    * later join/aggregation on that key skips its exchange entirely — the
-    * standard Spark answer to "co-locate the big fact tables once, join
-    * them forever". Bucket metadata needs the session catalog, so this
-    * registers an external table at the warehouse path via saveAsTable
-    * (plain `read(name)` still works on the files).
-    */
   /** Bucketed overwrite as a versioned publish: the bucketed files land
     * in an immutable version directory (written through a throwaway
     * staging catalog entry, which is how Spark assigns bucket ids to file
@@ -883,18 +867,29 @@ final class Warehouse(val spark: SparkSession, val root: String) {
       .schema(schema)
       .csv(path)
 
-  /** Land ONE micro-batch into a (flat) table through the exactly-once
-    * staging+promote protocol — the per-batch core of [[streamingAppend]]
-    * exposed for multi-sink foreachBatch composites (e.g. the
-    * [[Validation.streamingQuarantine]] pass/dead-letter split, where one
-    * batch id must land in TWO tables, each idempotently). */
-  private[engine] def landStreamBatch(bdf: DataFrame, name: String,
-                                      id: Long): Unit = {
+  /** Where `name`'s micro-batches land, resolved now. */
+  private def landingTarget(name: String): Warehouse.LandingTarget = {
     val p = dataPath(name)
-    val staging = s"$p/_stream_staging/b$id"
-    bdf.write.mode(SaveMode.Overwrite).parquet(staging)
-    promoteStaged(staging, p, id)
-    ()
+    val written = fs(new Path(p)).exists(new Path(p))
+    Warehouse.LandingTarget(p, partitioningMarker(p).map(_._1).getOrElse(Nil),
+      if (written) Some(readPath(p).schema) else None)
+  }
+
+  /** Land ONE micro-batch exactly-once — the lander every streamed write
+    * goes through: align the batch to the target schema (a drifted batch
+    * is rejected like a batch [[append]] would be, not landed as files
+    * that poison every later scan), stage it under the underscore-
+    * invisible `_stream_staging/b<id>` dir — partition-aligned when the
+    * target is a partitioned table, since unpartitioned files at the root
+    * of a hive tree would be invisible to its reads — and promote it
+    * ([[promoteStaged]]). Returns the promoted files: none when `id`
+    * already landed. */
+  private def landBatch(bdf: DataFrame, name: String,
+                        t: Warehouse.LandingTarget, id: Long): Seq[Path] = {
+    val staging = s"${t.p}/_stream_staging/b$id"
+    t.expected.fold(bdf)(alignToSchema(bdf, _, name))
+      .write.mode(SaveMode.Overwrite).partitionBy(t.parts: _*).parquet(staging)
+    promoteStaged(staging, t.p, id)
   }
 
   /** Streaming append sink: exactly-once parquet appends into a warehouse
@@ -904,127 +899,72 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     * NOT Spark's file sink: that sink writes a `_spark_metadata` log, and
     * any batch read of a directory containing one sees ONLY sink-logged
     * files — batch-published rows in the same table would silently vanish
-    * from reads. Instead each micro-batch stages to an
-    * underscore-invisible `_stream_staging/b<id>` dir and is PROMOTED by
-    * renaming its files to `stream-b<id>-…` names (partition-aligned when
-    * the target is a partitioned published table). Exactly-once: the
-    * checkpoint replays an uncommitted batch id, and the promote first
-    * removes any partial `stream-b<id>` files before renaming — so a
-    * crashed batch re-lands whole, never twice. Readers see the same
-    * contract as batch [[append]]: existing rows plus fully-promoted
-    * files.
+    * from reads. Instead each micro-batch lands through [[landBatch]]: it
+    * stages to an underscore-invisible `_stream_staging/b<id>` dir and is
+    * PROMOTED by renaming its files to `stream-b<id>-…` names.
+    * Exactly-once: the checkpoint replays an uncommitted batch id, and the
+    * promote first removes any partial `stream-b<id>` files before
+    * renaming — so a crashed batch re-lands whole, never twice. Readers
+    * see the same contract as batch [[append]]: existing rows plus
+    * fully-promoted files.
     *
-    * The path is pinned at stream start (single-writer model); vacuum's
-    * grace window covers re-publishes during the stream's life. */
+    * The path, partitioning and schema are pinned at stream start
+    * (single-writer model); vacuum's grace window covers re-publishes
+    * during the stream's life. */
   def streamingAppend(source: DataFrame, name: String, checkpoint: String,
                       zoneCols: Seq[String] = Nil,
                       bloomCols: Seq[String] = Nil,
                       bloomExpectedItemsPerFile: Long = 1L << 20,
                       bloomFpp: Double = 0.01): org.apache.spark.sql.streaming.StreamingQuery = {
-    val p = dataPath(name)
-    val parts = partitioningMarker(p).map(_._1)
-    // the target schema is pinned with the path: a micro-batch whose
-    // source drifted must be rejected like a batch append would, not
-    // land files that poison every later scan
-    val expected: Option[StructType] =
-      if (new Path(p).getFileSystem(spark.sessionState.newHadoopConf())
-            .exists(new Path(p))) Some(readPath(p).schema)
-      else None
+    val t = landingTarget(name)
     source.writeStream
       .option("checkpointLocation", checkpoint)
       .outputMode("append")
       .foreachBatch { (bdf: DataFrame, id: Long) =>
-        val aligned = expected match {
-          case Some(sch) => alignToSchema(bdf, sch, name)
-          case None => bdf
-        }
-        val staging = s"$p/_stream_staging/b$id"
-        val w = aligned.write.mode(SaveMode.Overwrite)
-        (parts match {
-          case Some(ps) => w.partitionBy(ps: _*)
-          case None => w
-        }).parquet(staging)
-        val promoted = promoteStaged(staging, p, id)
-        // self-registering zone maps: each promoted batch appends its own
-        // files' min/max rows to the manifest, so streamed tables keep
-        // skipping without rebuilds. Crash-safe by the promote protocol:
-        // a replayed id promotes nothing → registers nothing (no double
-        // rows); a crash between promote and register leaves the files
-        // UNKNOWN to the manifest — scanned conservatively, never missed.
-        if ((zoneCols.nonEmpty || bloomCols.nonEmpty) && promoted.nonEmpty) {
-          val newFiles = spark.read.option("basePath", p)
-            .parquet(promoted.map(_.toString): _*)
-          if (zoneCols.nonEmpty) {
-            val aggs = count(lit(1)).as("n_rows") +: zoneCols.flatMap(c =>
-              Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-            newFiles
-              .groupBy(input_file_name().as("file"))
-              .agg(aggs.head, aggs.tail: _*)
-              .coalesce(1)
-              .write.mode(SaveMode.Append)
-              .parquet(s"$p/_zonemap/${zoneKey(zoneCols)}")
-          }
-          // Bloom indexes self-register under the SAME crash contract as
-          // the zone rows above: replayed ids promote nothing → register
-          // nothing; a crash between promote and register leaves the
-          // files manifest-unknown — scanned conservatively, and
-          // [[refreshSkippingIndexes]] repairs the gap offline
-          bloomCols.foreach { c =>
-            newFiles
-              .groupBy(input_file_name().as("file"))
-              .agg(graft.functions.BloomIndexFunctions
-                .bloomAgg(col(c), bloomExpectedItemsPerFile, bloomFpp)
-                .as("bloom"))
-              .coalesce(1)
-              .write.mode(SaveMode.Append)
-              .parquet(s"$p/_bloomindex/$c")
-          }
+        val promoted = landBatch(bdf, name, t, id).map(_.toString)
+        // self-registering skipping indexes: each promoted batch appends
+        // its own files' zone and Bloom rows to the manifests, so streamed
+        // tables keep skipping without rebuilds. Crash-safe by the promote
+        // protocol: a replayed id promotes nothing → registers nothing (no
+        // double rows); a crash between promote and register leaves the
+        // files UNKNOWN to the manifest — scanned conservatively, never
+        // missed, and [[refreshSkippingIndexes]] repairs the gap offline.
+        if (promoted.nonEmpty) {
+          if (zoneCols.nonEmpty)
+            writeSkippingRows(t.p, promoted,
+              s"${t.p}/_zonemap/${zoneKey(zoneCols)}", zoneAggs(zoneCols))
+          bloomCols.foreach(c => writeSkippingRows(t.p, promoted,
+            s"${t.p}/_bloomindex/$c",
+            bloomAggs(c, bloomExpectedItemsPerFile, bloomFpp)))
         }
       }
       .start()
   }
 
-  /** Replay-IDEMPOTENT single-batch append — the per-micro-batch
-    * primitive underneath [[streamingAppend]], exposed for foreachBatch
-    * sinks composed OUTSIDE this class (the admission sink pairs it
-    * with an index mutation): the batch stages under the table dir and
-    * lands via the promote marker protocol, so a replayed `batchId`
-    * promotes NOTHING and the table never sees a batch twice. Schema
-    * alignment and partition handling match [[streamingAppend]]'s
-    * per-batch behavior, resolved per call (a sink that must pin them
-    * at stream start uses [[streamingAppend]] itself). */
+  /** Replay-IDEMPOTENT single-batch append — [[landBatch]] for
+    * foreachBatch sinks composed OUTSIDE this class (the admission sink
+    * pairs it with an index mutation; [[Validation.streamingQuarantine]]
+    * lands one batch id in TWO tables): a replayed `batchId` promotes
+    * NOTHING and the table never sees a batch twice. Schema alignment and
+    * partition handling match [[streamingAppend]]'s, resolved per call (a
+    * sink that must pin them at stream start uses [[streamingAppend]]
+    * itself). */
   def appendStreamBatch(bdf: DataFrame, name: String,
                         batchId: Long): Unit = {
-    val p = dataPath(name)
-    val parts = partitioningMarker(p).map(_._1)
-    val expected: Option[StructType] =
-      if (new Path(p).getFileSystem(spark.sessionState.newHadoopConf())
-            .exists(new Path(p))) Some(readPath(p).schema)
-      else None
-    val aligned = expected match {
-      case Some(sch) => alignToSchema(bdf, sch, name)
-      case None => bdf
-    }
-    val staging = s"$p/_stream_staging/b$batchId"
-    val w = aligned.write.mode(SaveMode.Overwrite)
-    (parts match {
-      case Some(ps) => w.partitionBy(ps: _*)
-      case None => w
-    }).parquet(staging)
-    promoteStaged(staging, p, batchId)
+    landBatch(bdf, name, landingTarget(name), batchId)
     ()
   }
 
   /** Incremental aggregate view maintenance — a streaming MATERIALIZED
     * VIEW over mergeable aggregates (sum/count/min/max). Each micro-batch
-    * is pre-aggregated down to its |groups| PARTIAL rows and landed via
-    * the [[streamingAppend]] exactly-once promote protocol; the view is
-    * read by RE-COMBINING partials ([[readAggregate]]) and periodically
-    * collapsed to one snapshot ([[compactAggregate]]). Storing partials
-    * instead of rewriting the snapshot per batch is what makes
-    * exactly-once FREE here: a replayed batch id promotes nothing, so
-    * there is no read-modify-write to double-apply and no marker race —
-    * the delta-style incremental-MV design.
+    * is pre-aggregated down to its |groups| PARTIAL rows and landed
+    * through [[landBatch]]; the view is read by RE-COMBINING partials
+    * ([[readAggregate]]) and periodically collapsed to one snapshot
+    * ([[compactAggregate]]). Storing partials instead of rewriting the
+    * snapshot per batch is what makes exactly-once FREE here: a replayed
+    * batch id promotes nothing, so there is no read-modify-write to
+    * double-apply and no marker race — the delta-style incremental-MV
+    * design.
     *
     * Scale shape: per batch, one partial aggregation (map-side combine,
     * shuffle ≤ |groups| rows) + a metadata-rename promote. Reads cost
@@ -1035,24 +975,19 @@ final class Warehouse(val spark: SparkSession, val root: String) {
                         specs: Seq[AggSpec], checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     AggSpec.validate(specs, keys)
-    val p = dataPath(table)
+    // partials land unaligned and unpartitioned: compaction's combine
+    // widens a decimal sum (decimal(20,2) partials → decimal(30,2)), and a
+    // restarted stream's narrower partials must still land beside it —
+    // parquet reads both back under the table's type
+    val t = Warehouse.LandingTarget(dataPath(table), Nil, None)
     source.writeStream
       .option("checkpointLocation", checkpoint)
       .outputMode("append")
       .foreachBatch { (bdf: DataFrame, id: Long) =>
-        appendAggBatch(AggSpec.partial(bdf, keys, specs), p, id)
+        landBatch(AggSpec.partial(bdf, keys, specs), table, t, id)
+        ()
       }
       .start()
-  }
-
-  /** Land one partial-aggregate batch exactly-once (exposed for replay
-    * tests; [[maintainAggregate]] is the production path). */
-  private[engine] def appendAggBatch(partial: DataFrame, p: String,
-                                     id: Long): Unit = {
-    val staging = s"$p/_stream_staging/b$id"
-    partial.write.mode(SaveMode.Overwrite).parquet(staging)
-    promoteStaged(staging, p, id)
-    ()
   }
 
   /** The maintained view: partials re-combined to one row per key. */
@@ -1417,14 +1352,37 @@ final class Warehouse(val spark: SparkSession, val root: String) {
       s"buildZoneMap: column name '$c' contains '__', which the zone " +
         "manifest key cannot encode — rename or alias the column"))
     val p = dataPath(table)
-    val aggs = count(lit(1)).as("n_rows") +:
+    writeSkippingRows(p, Nil, s"$p/_zonemap/${zoneKey(cols)}", zoneAggs(cols))
+  }
+
+  /** A zone-map manifest row's aggregates: row count, min and max per
+    * zoned column. */
+  private def zoneAggs(cols: Seq[String]): Seq[Column] =
+    count(lit(1)).as("n_rows") +:
       cols.flatMap(c => Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-    readPath(p)
+
+  /** A Bloom-index manifest row's aggregate: the file's filter over `c`. */
+  private def bloomAggs(c: String, expectedItemsPerFile: Long,
+                        fpp: Double): Seq[Column] =
+    Seq(graft.functions.BloomIndexFunctions
+      .bloomAgg(col(c), expectedItemsPerFile, fpp).as("bloom"))
+
+  /** Write the per-FILE skipping rows of data directory `p` to the
+    * manifest `dest`: one row per data file, `aggs` computed over it by
+    * one column-pruned scan. With `files` empty every file is indexed and
+    * the manifest is replaced (a build); otherwise only `files` are read
+    * and their rows append (a streamed batch's registration, a refresh).
+    * Either way the scan reads through [[readPath]]'s declared schema, so
+    * a partition value is hashed and compared as the type the table
+    * declares — never as the type partition discovery would infer. */
+  private def writeSkippingRows(p: String, files: Seq[String], dest: String,
+                                aggs: Seq[Column]): Unit =
+    readPath(p, files)
       .groupBy(input_file_name().as("file"))
       .agg(aggs.head, aggs.tail: _*)
       .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$p/_zonemap/${zoneKey(cols)}")
-  }
+      .write.mode(if (files.isEmpty) SaveMode.Overwrite else SaveMode.Append)
+      .parquet(dest)
 
   /** Data skipping, part 2: the file lists a `col BETWEEN lo AND hi`
     * scan needs — (kept, unknown): manifest files whose [min,max]
@@ -1496,12 +1454,8 @@ final class Warehouse(val spark: SparkSession, val root: String) {
       (kept.toSeq, actual.filterNot(known.contains))
     } else {
       import spark.implicits._
-      // strip `scheme://authority` / `scheme:` prefixes in-plan — the
-      // distributed analogue of Path.toUri.getPath for well-formed URIs
-      val normExpr = regexp_replace(col("file"),
-        lit("^[a-zA-Z][a-zA-Z0-9+.-]*:(//[^/]*)?"), lit(""))
       val actualDf = actual.toDF("file")
-      val known = manifest.select(normExpr.as("file"), col("keep"))
+      val known = manifest.select(normFile.as("file"), col("keep"))
       val kept = known.filter(coalesce(col("keep"), lit(false)))
         .join(actualDf, Seq("file"), "left_semi")
         .select("file").as[String].collect().toSeq // survivors only
@@ -1511,6 +1465,13 @@ final class Warehouse(val spark: SparkSession, val root: String) {
       (kept, unknown)
     }
   }
+
+  /** A manifest's `file` column with `scheme://authority` / `scheme:`
+    * prefixes stripped in-plan — the distributed analogue of
+    * `Path.toUri.getPath` for well-formed URIs, which the listing side of
+    * every manifest-vs-directory join uses. */
+  private def normFile: Column = regexp_replace(col("file"),
+    lit("^[a-zA-Z][a-zA-Z0-9+.-]*:(//[^/]*)?"), lit(""))
 
   /** Data skipping, part 3: `read(table).filter(c BETWEEN lo AND hi)`,
     * but scanning only the files [[zonePrunedFiles]] admits. Falls back
@@ -1547,26 +1508,13 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     }
   }
 
-  /** Scan only `files` of table directory `p` with the declared-schema
-    * restore [[readPath]] applies, re-applying the precise predicate —
-    * the shared tail of every file-skipping read. */
+  /** Scan only `files` of table directory `p` through [[readPath]],
+    * re-applying the precise predicate — the shared tail of every
+    * file-skipping read. */
   private def readFileSubset(p: String, files: Seq[String],
                              pred: Column): DataFrame =
     if (files.isEmpty) readPath(p).filter(pred).limit(0)
-    else {
-      val declared = partitioningMarker(p).map(_._2)
-        .orElse(evolvedSchemaMarker(p))
-      val reader = declared match {
-        case Some(schema) =>
-          spark.read.option("basePath", p).schema(schema)
-        case None => spark.read.option("basePath", p)
-      }
-      val df = reader.parquet(files: _*)
-      // restore declared column order (partition discovery reorders)
-      declared.map(s => df.select(s.fieldNames.map(col).toSeq: _*))
-        .getOrElse(df)
-        .filter(pred)
-    }
+    else readPath(p, files).filter(pred)
 
   /** ANALYZE for join planning: ONE aggregation scan per listed column
     * builds and persists, under `_stats/<col>/` of the CURRENT data
@@ -1592,37 +1540,57 @@ final class Warehouse(val spark: SparkSession, val root: String) {
                       width: Int = 4096, hotCapacity: Int = 1024): Unit = {
     require(cols.nonEmpty, "analyzeSketches needs at least one column")
     val p = dataPath(table)
-    val files = listDataFiles(new Path(p))
-    val (nf, tb) = (files.size.toLong, files.map(_.getLen).sum)
+    val stamp = censusCols(p)
     // ONE table scan sketches EVERY column: all per-column aggregates
     // ride a single partial-combined aggregate, so ANALYZE costs
     // O(scan), not O(|cols| × scan) — at 100 TB the difference between
     // one nightly pass and one pass per maintained column. The one
     // wide result row is pinned so the per-column stats writes below
     // re-read it instead of re-running the scan.
-    def sk(c: String) = col(c).cast("string")
-    val aggs = cols.zipWithIndex.flatMap { case (c, i) => Seq(
-      graft.functions.Cms.sketch(sk(c), depth, width).as(s"__cms_$i"),
-      graft.functions.Freq.spaceSaving(sk(c), hotCapacity).as(s"__hot_$i"),
-      // HLL distinct registers: the n_distinct every selectivity
-      // formula wants, in m=64 bytes of state, mergeable on append
-      // (register max) — same md5-word hash family as q100/q104
-      graft.functions.Hll.registers(
-        graft.functions.Hll.bucketCol(sk(c), "stats", HllM),
-        graft.functions.Hll.rankCol(sk(c), "stats"), HllM).as(s"__hll_$i"),
-      count(col(c)).as(s"__nv_$i"))
+    val aggs = cols.zipWithIndex.flatMap { case (c, i) =>
+      sketchAggs(c, i, depth, width, hotCapacity)
     } :+ count(lit(1)).as("__nr")
     val row = Exec.materialize(read(table).agg(aggs.head, aggs.tail: _*))
     cols.zipWithIndex.foreach { case (c, i) =>
-      row.select(lit(depth).as("depth"), lit(width).as("width"),
-          lit(hotCapacity).as("hot_capacity"),
-          lit(nf).as("n_files"), lit(tb).as("data_bytes"),
+      row.select(Seq(lit(depth).as("depth"), lit(width).as("width"),
+          lit(hotCapacity).as("hot_capacity")) ++ stamp ++ Seq(
           col(s"__cms_$i").as("cms"), col(s"__hot_$i").as("hot"),
           col(s"__hll_$i").as("hll"), col(s"__nv_$i").as("n_values"),
-          col("__nr").as("n_rows"))
+          col("__nr").as("n_rows")): _*)
         .coalesce(1)
         .write.mode(SaveMode.Overwrite).parquet(s"$p/_stats/$c")
     }
+  }
+
+  /** One column's sketch aggregates, suffixed `_i`: the CMS frequency
+    * sketch, Space-Saving hot keys, HLL distinct registers (the
+    * n_distinct every selectivity formula wants, in m=64 bytes of state,
+    * mergeable on append by register max — same md5-word hash family as
+    * q100/q104) and the non-null count. All hash the value's string
+    * form, so build and probe agree whatever the column type. */
+  private def sketchAggs(c: String, i: Int, depth: Int, width: Int,
+                         hotCapacity: Int): Seq[Column] = {
+    val v = col(c).cast("string")
+    Seq(graft.functions.Cms.sketch(v, depth, width).as(s"__cms_$i"),
+      graft.functions.Freq.spaceSaving(v, hotCapacity).as(s"__hot_$i"),
+      graft.functions.Hll.registers(
+        graft.functions.Hll.bucketCol(v, "stats", HllM),
+        graft.functions.Hll.rankCol(v, "stats"), HllM).as(s"__hll_$i"),
+      count(col(c)).as(s"__nv_$i"))
+  }
+
+  /** The data-file census `(n_files, data_bytes)` of data directory `p`
+    * — the freshness stamp every stats row carries and
+    * [[readLocalStatRow]] checks, and each version's size in [[history]]. */
+  private def census(p: String): (Long, Long) = {
+    val files = listDataFiles(new Path(p))
+    (files.size.toLong, files.map(_.getLen).sum)
+  }
+
+  /** [[census]] as the stats row's `n_files` / `data_bytes` columns. */
+  private def censusCols(p: String): Seq[Column] = {
+    val (nf, tb) = census(p)
+    Seq(lit(nf).as("n_files"), lit(tb).as("data_bytes"))
   }
 
   /** Register count for the catalog's distinct-count sketch — shared by
@@ -1654,12 +1622,9 @@ final class Warehouse(val spark: SparkSession, val root: String) {
       val rows = df.collect()
       if (rows.isEmpty) None
       else {
-        val census = rows.head
-        val nfIdx = df.schema.fieldIndex("n_files")
-        val tbIdx = df.schema.fieldIndex("data_bytes")
-        val files = listDataFiles(new Path(p))
-        if (census.getLong(nfIdx) != files.size.toLong ||
-            census.getLong(tbIdx) != files.map(_.getLen).sum) None
+        val stamp = rows.head
+        if ((stamp.getAs[Long]("n_files"), stamp.getAs[Long]("data_bytes")) !=
+            census(p)) None
         else Some(spark.createDataFrame(
           java.util.Arrays.asList(rows: _*), df.schema))
       }
@@ -1722,8 +1687,7 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     }
     append(batch, table)
     val p = dataPath(table)
-    val files = listDataFiles(new Path(p))
-    val (nf, tb) = (files.size.toLong, files.map(_.getLen).sum)
+    val stamp = censusCols(p)
     // geometry can differ per column (each analyze call picks its own),
     // so resolve them first, then sketch EVERY maintained column in ONE
     // pass over the pinned batch (the analyzeSketches one-scan shape)
@@ -1733,17 +1697,7 @@ final class Warehouse(val spark: SparkSession, val root: String) {
       (c, old, geo.getInt(0), geo.getInt(1), geo.getInt(2))
     }
     val batchAggs = geos.zipWithIndex.flatMap {
-      case ((c, _, depth, width, cap), i) => Seq(
-        graft.functions.Cms.sketch(col(c).cast("string"), depth, width)
-          .as(s"__cms_$i"),
-        graft.functions.Freq.spaceSaving(col(c).cast("string"), cap)
-          .as(s"__hot_$i"),
-        graft.functions.Hll.registers(
-          graft.functions.Hll.bucketCol(col(c).cast("string"), "stats",
-            HllM),
-          graft.functions.Hll.rankCol(col(c).cast("string"), "stats"),
-          HllM).as(s"__hll_$i"),
-        count(col(c)).as(s"__nv_$i"))
+      case ((c, _, depth, width, cap), i) => sketchAggs(c, i, depth, width, cap)
     } ++ preservedHist.zipWithIndex.flatMap { case ((c, _), i) => Seq(
       // histogram domain probes ride the SAME single batch pass —
       // previously one min/max agg job per maintained histogram
@@ -1764,9 +1718,8 @@ final class Warehouse(val spark: SparkSession, val root: String) {
         .crossJoin(batchRow.select(col(s"__cms_$i").as("cms_b"),
           col(s"__hot_$i").as("hot_b"), col(s"__hll_$i").as("hll_b"),
           col(s"__nv_$i").as("nv_b"), col("__nr").as("nr_b"))) // 1×1
-        .select(lit(depth).as("depth"), lit(width).as("width"),
-          lit(cap).as("hot_capacity"),
-          lit(nf).as("n_files"), lit(tb).as("data_bytes"),
+        .select(Seq(lit(depth).as("depth"), lit(width).as("width"),
+          lit(cap).as("hot_capacity")) ++ stamp ++ Seq(
           graft.functions.Cms.merge2(col("cms_a"), col("cms_b")).as("cms"),
           graft.functions.Freq.mergeStored(col("hot_a"), col("hot_b"), cap)
             .as("hot"),
@@ -1776,7 +1729,7 @@ final class Warehouse(val spark: SparkSession, val root: String) {
           zip_with(col("hll_a"), col("hll_b"), (x, y) => greatest(x, y))
             .as("hll"),
           (col("nv_a") + col("nv_b")).as("n_values"),
-          (col("nr_a") + col("nr_b")).as("n_rows"))
+          (col("nr_a") + col("nr_b")).as("n_rows")): _*)
         .coalesce(1)
         .write.mode(SaveMode.Overwrite).parquet(s"$p/_stats/$c")
     }
@@ -1791,25 +1744,17 @@ final class Warehouse(val spark: SparkSession, val root: String) {
       val inDomain = mm.isNullAt(0) || // all-null batch adds no mass
         (mm.getLong(0) >= vmin && mm.getLong(1) <= vmax)
       if (inDomain) {
-        val binned = batch.filter(col(c).isNotNull)
-          .groupBy(expr(s"(CAST(`$c` AS BIGINT) - ${vmin}L) div ${w}L")
-            .as("bin"))
-          .agg(count(lit(1)).as("cnt"))
-          .agg(map_from_entries(
-              collect_list(struct(col("bin"), col("cnt")))).as("bm"),
-            coalesce(sum(col("cnt")), lit(0L)).as("nv_b"))
-          .select(expr(s"transform(sequence(0, ${bins - 1}), " +
-            "b -> coalesce(element_at(bm, cast(b AS bigint)), 0L))")
-            .as("counts_b"), col("nv_b"))
+        val binned = histogramBins(batch, c, vmin, w, bins)
+          .select(col("counts").as("counts_b"),
+            coalesce(col("n_values"), lit(0L)).as("nv_b"))
         old.select(col("counts").as("counts_a"),
             col("n_values").as("nv_a"))
           .crossJoin(binned) // 1 row × 1 row
-          .select(lit(bins).as("bins"), lit(vmin).as("v_min"),
-            lit(vmax).as("v_max"), lit(w).as("bin_w"),
-            lit(nf).as("n_files"), lit(tb).as("data_bytes"),
+          .select(Seq(lit(bins).as("bins"), lit(vmin).as("v_min"),
+            lit(vmax).as("v_max"), lit(w).as("bin_w")) ++ stamp ++ Seq(
             zip_with(col("counts_a"), col("counts_b"), (x, y) => x + y)
               .as("counts"),
-            (col("nv_a") + col("nv_b")).as("n_values"))
+            (col("nv_a") + col("nv_b")).as("n_values")): _*)
           .coalesce(1)
           .write.mode(SaveMode.Overwrite).parquet(s"$p/_stats_hist/$c")
       }
@@ -1835,8 +1780,7 @@ final class Warehouse(val spark: SparkSession, val root: String) {
   def analyzeHistogram(table: String, c: String, bins: Int = 256): Unit = {
     require(bins >= 1, s"bins must be >= 1, got $bins")
     val p = dataPath(table)
-    val files = listDataFiles(new Path(p))
-    val (nf, tb) = (files.size.toLong, files.map(_.getLen).sum)
+    val stamp = censusCols(p)
     val t = read(table)
     val mm = t.agg(min(col(c).cast("long")).as("lo"),
       max(col(c).cast("long")).as("hi")).head()
@@ -1844,7 +1788,21 @@ final class Warehouse(val spark: SparkSession, val root: String) {
       s"analyzeHistogram: '$table.$c' has no non-null values")
     val (vmin, vmax) = (mm.getLong(0), mm.getLong(1))
     val w = (vmax - vmin) / bins + 1
-    t.filter(col(c).isNotNull)
+    histogramBins(t, c, vmin, w, bins)
+      .select(Seq(lit(bins).as("bins"), lit(vmin).as("v_min"),
+        lit(vmax).as("v_max"), lit(w).as("bin_w")) ++ stamp ++
+        Seq(col("counts"), col("n_values")): _*)
+      .coalesce(1)
+      .write.mode(SaveMode.Overwrite).parquet(s"$p/_stats_hist/$c")
+  }
+
+  /** The equi-width bin counts of `df.c` over the domain pinned at
+    * `vmin` with bin width `w`: one row of `counts` (dense, zero-filled —
+    * bins is small, driver-free) and `n_values` (null when `c` holds no
+    * non-null value). */
+  private def histogramBins(df: DataFrame, c: String, vmin: Long, w: Long,
+                            bins: Int): DataFrame =
+    df.filter(col(c).isNotNull)
       // `div`, not `/`: long / long is true division through DOUBLE in
       // Spark and mis-bins past 2^53 — the bin index must be exact
       .groupBy(expr(s"(CAST(`$c` AS BIGINT) - ${vmin}L) div ${w}L")
@@ -1853,17 +1811,10 @@ final class Warehouse(val spark: SparkSession, val root: String) {
       .agg(map_from_entries(collect_list(struct(col("bin"), col("cnt"))))
         .as("bm"),
         sum(col("cnt")).as("n_values"))
-      .select(lit(bins).as("bins"), lit(vmin).as("v_min"),
-        lit(vmax).as("v_max"), lit(w).as("bin_w"),
-        lit(nf).as("n_files"), lit(tb).as("data_bytes"),
-        // dense count array, zero-filled (bins is small, driver-free)
-        expr(s"transform(sequence(0, ${bins - 1}), " +
+      .select(expr(s"transform(sequence(0, ${bins - 1}), " +
           "b -> coalesce(element_at(bm, cast(b AS bigint)), 0L))")
           .as("counts"),
         col("n_values"))
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$p/_stats_hist/$c")
-  }
 
   /** The persisted histogram of `table.c` — None when never analyzed on
     * this version or stale under the file-census contract. */
@@ -1889,27 +1840,8 @@ final class Warehouse(val spark: SparkSession, val root: String) {
                       expectedItemsPerFile: Long = 1L << 20,
                       fpp: Double = 0.01): Unit = {
     val p = dataPath(table)
-    readPath(p)
-      .groupBy(input_file_name().as("file"))
-      .agg(graft.functions.BloomIndexFunctions
-        .bloomAgg(col(c), expectedItemsPerFile, fpp).as("bloom"))
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$p/_bloomindex/$c")
-  }
-
-  /** Read specific data files of a table directory with the directory's
-    * declared-schema discipline ([[readPath]]) and partition values
-    * restored via basePath — the file-subset reader the incremental
-    * skipping refresh needs. */
-  private def readDataFileSubset(p: String, files: Seq[String]): DataFrame = {
-    val base = spark.read.option("basePath", p)
-    (partitioningMarker(p) match {
-      case Some((_, schema)) => base.schema(schema)
-      case None => evolvedSchemaMarker(p) match {
-        case Some(schema) => base.schema(schema)
-        case None => base
-      }
-    }).parquet(files: _*)
+    writeSkippingRows(p, Nil, s"$p/_bloomindex/$c",
+      bloomAggs(c, expectedItemsPerFile, fpp))
   }
 
   /** Incremental maintenance for the data-skipping artifacts — the batch
@@ -1936,15 +1868,9 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     val p = dataPath(table)
     // keep=false: resolvePruned then returns (∅, manifest-unknown files),
     // on the gate-aware driver-set/join path shared with the readers
-    def unknownOf(manifest: DataFrame): Seq[String] =
-      resolvePruned(manifest.select(col("file"), lit(false).as("keep")), p)._2
-    // `_`/`.`-prefixed children are never manifests (a crashed
-    // compaction's staging dir, a stray marker) — reading one as a
-    // zone key would fail on its nonexistent columns
-    def manifestDirs(root: Path): Seq[Path] =
-      if (!fs(root).exists(root)) Nil
-      else fs(root).listStatus(root).toSeq.map(_.getPath)
-        .filter(d => !d.getName.startsWith("_") && !d.getName.startsWith("."))
+    def unknownOf(manifest: Path): Seq[String] =
+      resolvePruned(spark.read.parquet(manifest.toString)
+        .select(col("file"), lit(false).as("keep")), p)._2
     // garbage-collect a crashed compaction's leftovers first:
     // `_<key>.compact.tmp` never promoted (always garbage); `_<key>.old`
     // is the pre-compaction manifest — RESTORE it when the crash lost
@@ -1964,31 +1890,27 @@ final class Warehouse(val spark: SparkSession, val root: String) {
           }
         }
     }
-    manifestDirs(new Path(s"$p/_zonemap")).foreach { kp =>
-        val cols = kp.getName.split("__").toSeq
-        val unknown = unknownOf(spark.read.parquet(kp.toString))
-        if (unknown.nonEmpty) {
-          val aggs = count(lit(1)).as("n_rows") +: cols.flatMap(c =>
-            Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-          readDataFileSubset(p, unknown)
-            .groupBy(input_file_name().as("file"))
-            .agg(aggs.head, aggs.tail: _*)
-            .coalesce(1)
-            .write.mode(SaveMode.Append).parquet(kp.toString)
-        }
-      }
-    manifestDirs(new Path(s"$p/_bloomindex")).foreach { bp =>
-      val c = bp.getName
-      val unknown = unknownOf(spark.read.parquet(bp.toString))
-      if (unknown.nonEmpty)
-        readDataFileSubset(p, unknown)
-          .groupBy(input_file_name().as("file"))
-          .agg(graft.functions.BloomIndexFunctions
-            .bloomAgg(col(c), bloomExpectedItemsPerFile, bloomFpp)
-            .as("bloom"))
-          .coalesce(1)
-          .write.mode(SaveMode.Append).parquet(bp.toString)
+    manifestDirs(p, "_zonemap").foreach { kp =>
+      val unknown = unknownOf(kp)
+      if (unknown.nonEmpty) writeSkippingRows(p, unknown, kp.toString,
+        zoneAggs(kp.getName.split("__").toSeq))
     }
+    manifestDirs(p, "_bloomindex").foreach { bp =>
+      val unknown = unknownOf(bp)
+      if (unknown.nonEmpty) writeSkippingRows(p, unknown, bp.toString,
+        bloomAggs(bp.getName, bloomExpectedItemsPerFile, bloomFpp))
+    }
+  }
+
+  /** The skipping manifests under `<p>/<root>` (`_zonemap` or
+    * `_bloomindex`). `_`/`.`-prefixed children are never manifests — a
+    * crashed compaction's staging or aside dir, a stray marker — and
+    * reading one as a zone key would fail on its nonexistent columns. */
+  private def manifestDirs(p: String, root: String): Seq[Path] = {
+    val r = new Path(s"$p/$root")
+    if (!fs(r).exists(r)) Nil
+    else fs(r).listStatus(r).toSeq.map(_.getPath)
+      .filter(d => !d.getName.startsWith("_") && !d.getName.startsWith("."))
   }
 
   /** Manifest hygiene for the skipping artifacts: rewrite every zone-map
@@ -2010,9 +1932,6 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     val p = dataPath(table)
     val actualDf = listDataFiles(new Path(p))
       .map(_.getPath.toUri.getPath).toDF("__live")
-    // same scheme-stripping normalization as the readers' join path
-    val normExpr = regexp_replace(col("file"),
-      lit("^[a-zA-Z][a-zA-Z0-9+.-]*:(//[^/]*)?"), lit(""))
     def compactDir(dir: Path): (String, Long, Long) = {
       val f = fs(dir)
       val staging = new Path(dir.getParent, s"_${dir.getName}.compact.tmp")
@@ -2020,29 +1939,27 @@ final class Warehouse(val spark: SparkSession, val root: String) {
       if (f.exists(staging)) f.delete(staging, true)
       if (f.exists(aside)) f.delete(aside, true)
       // ONE job: the before/after row counts ride the staging write as
-      // Observation metrics (the semi-join consumes every manifest row,
-      // so both counts land) — previously two count jobs per manifest
-      val obs = new org.apache.spark.sql.Observation(
-        s"compact_${dir.getName.take(20)}_${java.util.UUID.randomUUID()
-          .toString.take(8)}")
-      val manifest = spark.read.parquet(dir.toString)
-        .observe(obs, count(lit(1)).as("before"))
+      // observed metrics (the semi-join consumes every manifest row, so
+      // both counts land) — not two count jobs per manifest
+      def tag(prefix: String) = s"${prefix}_${dir.getName.take(20)}_" +
+        java.util.UUID.randomUUID().toString.take(8)
+      val (manifest, beforeM) = Exec.observed(spark.read.parquet(dir.toString),
+        tag("compact"), Map("before" -> count(lit(1))))
       val live = manifest
-        .join(actualDf, normExpr === col("__live"), "left_semi")
+        .join(actualDf, normFile === col("__live"), "left_semi")
       // the staging write MATERIALIZES the filtered manifest before the
       // source dir is touched — ordering is what makes this safe
-      val obsL = new org.apache.spark.sql.Observation(
-        s"compactL_${dir.getName.take(20)}_${java.util.UUID.randomUUID()
-          .toString.take(8)}")
-      live.observe(obsL, count(lit(1)).as("after"))
-        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(staging.toString)
+      val (liveObserved, afterM) = Exec.observed(live, tag("compactL"),
+        Map("after" -> count(lit(1))))
+      liveObserved.coalesce(1)
+        .write.mode(SaveMode.Overwrite).parquet(staging.toString)
       // PropagateEmptyRelation can prune an observed subtree outright
       // (e.g. every data file vanished → empty semi-join build side),
-      // in which case the metric never lands and obs.get returns an
+      // in which case the metric never lands and the observation is an
       // empty map — fall back to the counting job only on that rare path
-      val before = obs.get.get("before").map(_.asInstanceOf[Long])
+      val before = beforeM().get("before").map(_.asInstanceOf[Long])
         .getOrElse(spark.read.parquet(dir.toString).count())
-      val after = obsL.get.get("after").map(_.asInstanceOf[Long])
+      val after = afterM().get("after").map(_.asInstanceOf[Long])
         .getOrElse(live.count())
       if (after == 0) {
         // every indexed file vanished: an empty manifest dir can be
@@ -2065,15 +1982,7 @@ final class Warehouse(val spark: SparkSession, val root: String) {
       f.delete(aside, true)
       (dir.toString, before, after)
     }
-    Seq("_zonemap", "_bloomindex").flatMap { root =>
-      val r = new Path(s"$p/$root")
-      if (!fs(r).exists(r)) Nil
-      else fs(r).listStatus(r).toSeq.map(_.getPath)
-        // hidden children are never manifests — in particular a crashed
-        // compaction's own `_<key>.compact.tmp` staging dir
-        .filter(d => !d.getName.startsWith("_") && !d.getName.startsWith("."))
-        .map(compactDir)
-    }
+    Seq("_zonemap", "_bloomindex").flatMap(manifestDirs(p, _)).map(compactDir)
   }
 
   /** Point-lookup skipping, part 2: the files an `c IN (values)` scan
@@ -2430,6 +2339,14 @@ final class Warehouse(val spark: SparkSession, val root: String) {
       .option("emptyValue", "")
       .mode(SaveMode.Overwrite).csv(path)
   }
+}
+
+object Warehouse {
+  /** Where a table's micro-batches land: its data directory, that
+    * directory's partition columns, and the schema every batch aligns to
+    * (None before the table's first write — the first batch defines it). */
+  private final case class LandingTarget(p: String, parts: Seq[String],
+                                         expected: Option[StructType])
 }
 
 /** Mergeable-aggregate column spec for incremental view maintenance:

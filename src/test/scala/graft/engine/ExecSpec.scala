@@ -31,7 +31,7 @@ class ExecSpec extends SparkSpec {
       jobs.set(0)
       val rows = consumed.count()
       val m = get() // blocks until the observation lands
-      Thread.sleep(200) // let the job-start listener drain
+      org.apache.spark.graft.Bus.drain(spark.sparkContext)
       assert(rows == 1L)
       assert(m("n") == 2L && m("nulls_x") == 1L && m("max_id") == 3L)
       assert(jobs.get() <= 2, s"metrics must ride the consuming action, " +

@@ -562,6 +562,40 @@ class PublishSpec extends SparkSpec {
     assert(e.getMessage.contains("cross-row"))
   }
 
+  test("streamingQuarantine into a partitioned table lands clean rows " +
+      "inside its partition dirs") {
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import Validation._
+    val wh = new Warehouse(spark, freshRoot)
+    wh.overwritePartitioned(Seq((1L, 5.0, "A")).toDF("id", "qty", "flag"),
+      "good", Seq("flag"))
+    val stream = MemoryStream[(Long, Double, String)]
+    stream.addData(Seq((2L, 10.0, "B"), (3L, 999.0, "B")))
+    val q = streamingQuarantine(wh,
+      stream.toDF().toDF("id", "qty", "flag"), "good", "dead",
+      Seq(InRange("qty", 1.0, 50.0)),
+      java.nio.file.Files.createTempDirectory("wh-quar-p").toString)
+    q.processAllAvailable()
+    q.stop()
+    // a loose file at the root of the hive tree would be invisible here
+    assert(wh.read("good").select("id").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L))
+    assert(wh.read("good").filter($"flag" === "B").count() == 1)
+    assert(wh.read("dead").select("id").as[Long].collect().toSeq == Seq(3L))
+  }
+
+  test("appendEvolved accepts the nullability a plain append accepts") {
+    val wh = new Warehouse(spark, freshRoot)
+    wh.append(Seq((1, Array(1f, 2f))).toDF("id", "v"), "t")
+    // toDF declares array<float> without null elements; the read-back
+    // table allows them — the same type to both appends
+    wh.appendEvolved(Seq((2, Array(3f), "x")).toDF("id", "v", "tag"), "t")
+    val rows = wh.read("t").orderBy("id").collect()
+      .map(r => (r.getInt(0), r.getSeq[Float](1), Option(r.getString(2))))
+    assert(rows.toSeq == Seq((1, Seq(1f, 2f), None), (2, Seq(3f), Some("x"))))
+  }
+
   test("changeFeed carries full payloads: insert/delete rows once, " +
       "changed keys as an update_pre/update_post pair, unchanged silent") {
     val wh = new Warehouse(spark, freshRoot)
@@ -666,13 +700,39 @@ class PublishSpec extends SparkSpec {
     assert(wh.read("agg").filter($"k" === "a").count() == 2)
     // a replayed batch id promotes NOTHING (checkpoint replay after a
     // crash-before-commit) — the view is unchanged, no double counting
-    wh.appendAggBatch(
-      AggSpec.partial(b2.toDF("k", "v"), keys, specs), wh.dataPath("agg"), 1L)
+    wh.appendStreamBatch(
+      AggSpec.partial(b2.toDF("k", "v"), keys, specs), "agg", 1L)
     assert(viewRows == want)
     // compaction collapses to one row per key, view identical
     wh.compactAggregate("agg", keys, specs)
     assert(wh.read("agg").count() == 3)
     assert(viewRows == want)
+  }
+
+  test("maintainAggregate: a restarted stream lands decimal partials " +
+      "beside a compacted snapshot") {
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val wh = new Warehouse(spark, freshRoot)
+    val keys = Seq("k")
+    val specs = Seq(AggSpec("s", "sum", "v"))
+    val stream = MemoryStream[(String, BigDecimal)]
+    val src = stream.toDF().selectExpr("_1 AS k", "CAST(_2 AS DECIMAL(10,2)) AS v")
+    def run(): Unit = {
+      val q = wh.maintainAggregate(src, "agg", keys, specs, s"${wh.root}/_chk")
+      q.processAllAvailable()
+      q.stop()
+    }
+    stream.addData(Seq(("a", BigDecimal("1.50"))))
+    run()
+    // combine widens the stored sum to decimal(30,2); new partials stay
+    // decimal(20,2)
+    wh.compactAggregate("agg", keys, specs)
+    stream.addData(Seq(("a", BigDecimal("2.25"))))
+    run()
+    assert(wh.readAggregate("agg", keys, specs).collect()
+      .map(r => (r.getString(0), r.getDecimal(1).doubleValue)).toSeq ==
+      Seq(("a", 3.75)))
   }
 
   test("maintainAggregate validates specs loudly") {

@@ -337,6 +337,31 @@ class ZoneMapSpec extends SparkSpec {
     assert(wh.readBloomPruned("ts", "k", Seq(5005L)).count() == 1)
   }
 
+  test("a streamed batch's Bloom rows hash a partition value as its " +
+      "declared type") {
+    val wh = new Warehouse(spark, freshRoot)
+    wh.overwritePartitioned(Seq((1L, "007"), (2L, "010")).toDF("id", "code"),
+      "t", Seq("code"))
+    wh.buildBloomIndex("t", "code")
+    val in = s"${wh.root}/in"
+    Files.createDirectories(java.nio.file.Paths.get(in))
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("id",
+        org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("code",
+        org.apache.spark.sql.types.StringType)))
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$in/a.csv"),
+      "id,code\n3,042\n")
+    val q = wh.streamingAppend(wh.readCsvStream(in, schema), "t",
+      s"${wh.root}/_chk_bl", bloomCols = Seq("code"))
+    q.processAllAvailable()
+    q.stop()
+    assert(wh.read("t").filter($"code" === "042").count() == 1)
+    // partition discovery would read `code=042` as the int 42; the
+    // streamed file's filter must hold the string the probe hashes
+    assert(wh.readBloomPruned("t", "code", Seq("042")).count() == 1)
+  }
+
   test("zone-pruned read of a hive-partitioned table keeps schema order") {
     val wh = new Warehouse(spark, freshRoot)
     val df = (1 to 2000).map(i => (i.toLong, i % 4, s"v$i"))
