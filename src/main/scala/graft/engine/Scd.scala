@@ -27,7 +27,9 @@ import org.apache.spark.sql.functions._
   *
   * Streaming: land the raw change rows exactly-once with
   * [[Warehouse.streamingAppend]] (its promote protocol makes replayed
-  * micro-batches no-ops — no SCD-specific machinery needed), then derive
+  * micro-batches no-ops, and its replay markers live at the table root,
+  * so a merge or compaction between runs keeps them — no SCD-specific
+  * machinery needed), then derive
   * history as `fromChangeLog(wh.read(logTable))`, or keep a materialized
   * snapshot current with [[merge]] between stream runs. Because the
   * version sequence is a pure function of the log's row set, the

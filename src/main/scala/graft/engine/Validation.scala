@@ -198,22 +198,6 @@ object Validation {
       .toDF("rule", "violations", "n_rows", "pass")
   }
 
-  /** Constraint-gated publish: evaluate the rules, and only if EVERY one
-    * passes, atomically publish `df` as `name` through `wh`. On any
-    * violation nothing is written and the failing report rows come back —
-    * the "quality gate before the table goes live" loop closed in one
-    * call. Returns Right(version) or Left(failing report rows). */
-  def publishChecked(wh: Warehouse, df: DataFrame, name: String,
-                     rules: Seq[Rule],
-                     partitionCols: Seq[String] = Nil)
-      : Either[Seq[(String, Long)], String] = {
-    val report = checkConstraints(df, rules)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getBoolean(3)))
-    val failing = report.filter(!_._3).map(t => (t._1, t._2)).toSeq
-    if (failing.nonEmpty) Left(failing)
-    else Right(wh.publish(df, name, partitionCols))
-  }
-
   /** The rule names a row violates, as an array column (empty = clean).
     * Row-local rules only — see [[rowLocalPredicates]]. */
   def violatedRules(rules: Seq[Rule]): org.apache.spark.sql.Column = {

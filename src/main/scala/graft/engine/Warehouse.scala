@@ -68,18 +68,8 @@ final class Warehouse(val spark: SparkSession, val root: String) {
   }
 
   /** The published version id, if this table uses versioned layout. */
-  def currentVersion(name: String): Option[String] = {
-    val mp = manifestPath(name)
-    val f = rawFs(mp)
-    if (!f.exists(mp)) None
-    else {
-      val in = f.open(mp)
-      try {
-        val src = scala.io.Source.fromInputStream(in, "UTF-8")
-        Some(src.mkString.trim).filter(_.nonEmpty)
-      } finally in.close()
-    }
-  }
+  def currentVersion(name: String): Option[String] =
+    atomicRead(manifestPath(name)).map(_.trim).filter(_.nonEmpty)
 
   /** The directory a read of `name` resolves to: the current published
     * version when a manifest exists, the plain table dir otherwise.
@@ -181,13 +171,19 @@ final class Warehouse(val spark: SparkSession, val root: String) {
   }
 
   /** Write `content` to `target` atomically: tmp file in the same
-    * directory, then rename-over. A reader never sees a partial or empty
-    * file — it sees the old content or the new, nothing in between. The
-    * underscore/dot tmp name is invisible to partition discovery. */
-  private def atomicWrite(target: Path, content: String): Unit = {
+    * directory, then rename-over — the one way this engine replaces a
+    * file in place (manifests, markers, views, index sidecars). A reader
+    * never sees a partial or empty file — it sees the old content or the
+    * new, nothing in between. Raw (checksum-free) I/O, so the target is
+    * ONE file and no `.crc` beside it can disagree with it; read it back
+    * with [[atomicRead]]. The tmp name `_<name minus one leading
+    * underscore>.<rand>.tmp` is invisible to partition discovery, and a
+    * hidden target's tmp shares its prefix (`_health` → `_health.<rand>
+    * .tmp`), so a prefix rule that skips the target skips its tmp too. */
+  private[graft] def atomicWrite(target: Path, content: String): Unit = {
     val f = rawFs(target)
-    val tmp = new Path(target.getParent,
-      s"_${target.getName}.${scala.util.Random.nextInt(0x1000000)}.tmp")
+    val tmp = new Path(target.getParent, s"_${target.getName.stripPrefix("_")}" +
+      s".${scala.util.Random.nextInt(0x1000000)}.tmp")
     val out = f.create(tmp, true)
     try out.write(content.getBytes(StandardCharsets.UTF_8)) finally out.close()
     f match {
@@ -204,6 +200,20 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     }
   }
 
+  /** The content of a file written by [[atomicWrite]], through the same
+    * checksum-free view; None when absent or a directory. */
+  private[graft] def atomicRead(target: Path): Option[String] = {
+    val f = rawFs(target)
+    val isFile = try f.getFileStatus(target).isFile
+      catch { case _: java.io.FileNotFoundException => false }
+    if (!isFile) None
+    else {
+      val in = f.open(target)
+      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
+      finally in.close()
+    }
+  }
+
   /** Atomically point the table's manifest at `version`. */
   private def swapManifest(name: String, version: String): Unit =
     atomicWrite(manifestPath(name), version)
@@ -214,15 +224,19 @@ final class Warehouse(val spark: SparkSession, val root: String) {
       f"-${scala.util.Random.nextInt(0x1000000)}%06x"
 
   /** Drop all but the newest `keep` published versions, plus any stale
-    * pre-publish loose files still sitting in the table dir.
+    * pre-publish loose files still sitting in the table dir. The table
+    * state that every version shares is kept whatever the window: the
+    * `_current` manifest and the stream replay markers
+    * (`_stream_promoted`, `_stream_attempt` — [[promoteStaged]] prunes
+    * them itself).
     *
     * `olderThanMs` is the reader grace window: a retired version younger
     * than it is NEVER dropped, whatever `keep` says — a long-running
     * reader (a pinned [[streamingAppend]] source, a multi-hour scan) that
     * resolved its path before the latest publish keeps its files until
     * the window expires. The same window gates the loose-file cleanup,
-    * so a root-pinned stream's landed batches and replay markers survive
-    * while the stream is alive. Set it to comfortably above the longest
+    * so a root-pinned stream's landed batches survive while the stream
+    * is alive. Set it to comfortably above the longest
     * scan/stream-restart interval; 0 trusts `keep` alone (and sweeps all
     * loose files — don't pass 0 while a root-pinned stream runs). */
   def vacuum(name: String, keep: Int = 1, olderThanMs: Long = 0L): Unit = {
@@ -249,37 +263,31 @@ final class Warehouse(val spark: SparkSession, val root: String) {
       // the first publish, checksum droppings, dead swap temps — is stale
       // ONCE THE GRACE WINDOW PASSES. The window must apply here too: a
       // streamingAppend pinned to the table root before its first publish
-      // lands `stream-b*` files and `_stream_promoted`/`_stream_attempt`
-      // replay markers here, and deleting them ungated would drop a live
-      // stream's batches and its exactly-once protection (marker dirs
-      // stay young while the stream is alive — children keep arriving)
+      // lands `stream-b*` files here, and deleting them ungated would
+      // drop a live stream's batches
       f.listStatus(new Path(dir(name))).toSeq
         .filter { st =>
-          val n = st.getPath.getName
-          n != "_versions" && n != "_current" &&
-            st.getModificationTime < cutoff
+          !TableState(st.getPath.getName) && st.getModificationTime < cutoff
         }
         .foreach(st => f.delete(st.getPath, true))
     }
   }
 
+  /** The entries of a table dir that are table state, not data: vacuum
+    * never sweeps them. */
+  private val TableState =
+    Set("_versions", "_current", "_stream_promoted", "_stream_attempt")
+
   /** The `_partitioning` marker of the data directory, if present:
     * (partition columns, original full schema). */
-  private def partitioningMarker(path: String): Option[(Seq[String], StructType)] = {
-    val mk = new Path(s"$path/_partitioning")
-    val f = rawFs(mk)
-    if (!f.exists(mk)) None
-    else {
-      val in = f.open(mk)
-      val lines =
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
+  private def partitioningMarker(path: String): Option[(Seq[String], StructType)] =
+    atomicRead(new Path(s"$path/_partitioning")).flatMap { body =>
+      val lines = body.linesIterator.toList
       def valueOf(key: String) = lines.find(_.startsWith(s"$key="))
         .map(_.drop(key.length + 1))
       for (p <- valueOf("parts"); s <- valueOf("schema"))
         yield (p.split(",").toSeq, StructType.fromDDL(s))
     }
-  }
 
   /** The partition columns of the table's CURRENT data, if partitioned. */
   def partitioningOf(name: String): Seq[String] =
@@ -889,7 +897,7 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     val staging = s"${t.p}/_stream_staging/b$id"
     t.expected.fold(bdf)(alignToSchema(bdf, _, name))
       .write.mode(SaveMode.Overwrite).partitionBy(t.parts: _*).parquet(staging)
-    promoteStaged(staging, t.p, id)
+    promoteStaged(staging, t.p, name, id)
   }
 
   /** Streaming append sink: exactly-once parquet appends into a warehouse
@@ -975,11 +983,7 @@ final class Warehouse(val spark: SparkSession, val root: String) {
                         specs: Seq[AggSpec], checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     AggSpec.validate(specs, keys)
-    // partials land unaligned and unpartitioned: compaction's combine
-    // widens a decimal sum (decimal(20,2) partials → decimal(30,2)), and a
-    // restarted stream's narrower partials must still land beside it —
-    // parquet reads both back under the table's type
-    val t = Warehouse.LandingTarget(dataPath(table), Nil, None)
+    val t = landingTarget(table)
     source.writeStream
       .option("checkpointLocation", checkpoint)
       .outputMode("append")
@@ -1005,9 +1009,9 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     ()
   }
 
-  /** Move a staged micro-batch's data files into the table directory under
-    * `stream-b<id>-…` names, idempotently. Relative paths are preserved,
-    * which keeps hive partition subdirectories aligned.
+  /** Move a staged micro-batch's data files into the data directory `dest`
+    * under `stream-b<id>-…` names, idempotently. Relative paths are
+    * preserved, which keeps hive partition subdirectories aligned.
     *
     * Replay protocol (a replayed id means the batch never committed to the
     * checkpoint): an `_stream_promoted/b<id>` marker means the previous
@@ -1015,14 +1019,18 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     * `_stream_attempt/b<id>` marker without it means a promote died midway
     * — sweep that id's partial files before re-promoting. The common
     * no-crash path sees neither marker and pays no recursive listing of
-    * the (at scale, very large) table directory. */
-  private def promoteStaged(staging: String, dest: String,
+    * the (at scale, very large) table directory. Both marker dirs live at
+    * the table root `<root>/<table>/`, which every version shares: a
+    * republish (compact, merge, a hygiene rewrite) changes the data
+    * directory but never the markers, so a batch replayed after it still
+    * reads as landed. Only the last 100 ids are kept. */
+  private def promoteStaged(staging: String, dest: String, table: String,
                             id: Long): Seq[Path] = {
     val sp = new Path(staging)
     val dp = new Path(dest)
     val f = fs(sp)
-    val promotedMark = new Path(dp, s"_stream_promoted/b$id")
-    val attemptMark = new Path(dp, s"_stream_attempt/b$id")
+    val promotedMark = new Path(dir(table), s"_stream_promoted/b$id")
+    val attemptMark = new Path(dir(table), s"_stream_attempt/b$id")
     def dataFiles(root: Path): Seq[Path] = {
       val it = f.listFiles(root, true)
       val buf = scala.collection.mutable.ArrayBuffer.empty[Path]
@@ -1052,9 +1060,7 @@ final class Warehouse(val spark: SparkSession, val root: String) {
       val destDir = if (relDir.isEmpty) dp else new Path(dp, relDir)
       f.mkdirs(destDir)
       val target = new Path(destDir, s"stream-b$id-${file.getName}")
-      if (!f.rename(file, target))
-        throw new java.io.IOException(
-          s"promote of streamed batch $id failed for $file")
+      moveStaged(file, target)
       target
     }
     f.mkdirs(promotedMark.getParent)
@@ -1073,6 +1079,14 @@ final class Warehouse(val spark: SparkSession, val root: String) {
       .foreach(f.delete(_, false))
     promoted
   }
+
+  /** Make a fully written file visible under `target`, a name no reader
+    * has listed yet: one rename, so a reader sees the file whole or not
+    * at all. With [[atomicWrite]]'s rename-over, the only way an engine
+    * write becomes visible in place. */
+  private def moveStaged(file: Path, target: Path): Unit =
+    if (!fs(file).rename(file, target))
+      throw new java.io.IOException(s"move of staged file $file to $target failed")
 
   /** MERGE/upsert: rows of `updates` replace same-key existing rows, new
     * keys are added, everything else is kept. The reference's
@@ -1871,25 +1885,6 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     def unknownOf(manifest: Path): Seq[String] =
       resolvePruned(spark.read.parquet(manifest.toString)
         .select(col("file"), lit(false).as("keep")), p)._2
-    // garbage-collect a crashed compaction's leftovers first:
-    // `_<key>.compact.tmp` never promoted (always garbage); `_<key>.old`
-    // is the pre-compaction manifest — RESTORE it when the crash lost
-    // the live dir between the two renames, delete it once a live dir
-    // exists (the compaction completed; the aside delete didn't)
-    Seq("_zonemap", "_bloomindex").foreach { root =>
-      val r = new Path(s"$p/$root")
-      if (fs(r).exists(r)) fs(r).listStatus(r).toSeq.map(_.getPath)
-        .filter(_.getName.startsWith("_")).foreach { d =>
-          val n = d.getName
-          if (n.endsWith(".compact.tmp")) fs(d).delete(d, true)
-          else if (n.endsWith(".old")) {
-            val live = new Path(r, n.stripPrefix("_").stripSuffix(".old"))
-            if (fs(d).exists(live)) fs(d).delete(d, true)
-            else require(fs(d).rename(d, live),
-              s"refreshSkippingIndexes: crash recovery rename $d -> $live failed")
-          }
-        }
-    }
     manifestDirs(p, "_zonemap").foreach { kp =>
       val unknown = unknownOf(kp)
       if (unknown.nonEmpty) writeSkippingRows(p, unknown, kp.toString,
@@ -1904,8 +1899,8 @@ final class Warehouse(val spark: SparkSession, val root: String) {
 
   /** The skipping manifests under `<p>/<root>` (`_zonemap` or
     * `_bloomindex`). `_`/`.`-prefixed children are never manifests — a
-    * crashed compaction's staging or aside dir, a stray marker — and
-    * reading one as a zone key would fail on its nonexistent columns. */
+    * crashed compaction's staging dir, a stray marker — and reading one
+    * as a zone key would fail on its nonexistent columns. */
   private def manifestDirs(p: String, root: String): Seq[Path] = {
     val r = new Path(s"$p/$root")
     if (!fs(r).exists(r)) Nil
@@ -1915,18 +1910,23 @@ final class Warehouse(val spark: SparkSession, val root: String) {
 
   /** Manifest hygiene for the skipping artifacts: rewrite every zone-map
     * and Bloom manifest keeping only rows whose data file still exists,
-    * collapsed back to ONE parquet file. Needed over a table's life
-    * because [[refreshSkippingIndexes]] and the streaming
+    * one row per file, collapsed back to ONE parquet file. Needed over a
+    * table's life because [[refreshSkippingIndexes]] and the streaming
     * self-registration add a small manifest file per batch, and
     * compaction/re-cluster strands rows for vanished files — read-time
     * reconciliation drops them ([[resolvePruned]]), but the manifest
     * itself accumulates the very small-files problem it exists to
     * mitigate (at 10⁵-10⁷ manifest rows the dead weight is real).
     *
-    * The rewrite is stage-then-rename per manifest; the delete→rename
-    * window degrades readers CONSERVATIVELY (no manifest → plain
-    * filtered scan, never wrong rows). Returns
-    * (manifest dir, rows before, rows after) per manifest compacted. */
+    * Per manifest: write the rewrite to a hidden `_<key>.compact.tmp`
+    * sibling, move its one file into the live dir under a fresh name,
+    * then delete the files it replaces. No directory is ever renamed.
+    * A crash leaves either a stray staging dir (hidden, swept by the
+    * next compaction) or the compacted file beside the files it
+    * replaces — duplicate rows for the same files, which cannot change
+    * an answer (both readers reduce the kept files to a set) and which
+    * the next compaction drops. Returns (manifest dir, rows before, rows
+    * after) per manifest compacted. */
   def compactSkippingManifests(table: String): Seq[(String, Long, Long)] = {
     import spark.implicits._
     val p = dataPath(table)
@@ -1935,20 +1935,19 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     def compactDir(dir: Path): (String, Long, Long) = {
       val f = fs(dir)
       val staging = new Path(dir.getParent, s"_${dir.getName}.compact.tmp")
-      val aside = new Path(dir.getParent, s"_${dir.getName}.old")
       if (f.exists(staging)) f.delete(staging, true)
-      if (f.exists(aside)) f.delete(aside, true)
+      val replaced = listDataFiles(dir).map(_.getPath)
+      def manifestRows = spark.read.parquet(replaced.map(_.toString): _*)
       // ONE job: the before/after row counts ride the staging write as
       // observed metrics (the semi-join consumes every manifest row, so
       // both counts land) — not two count jobs per manifest
       def tag(prefix: String) = s"${prefix}_${dir.getName.take(20)}_" +
         java.util.UUID.randomUUID().toString.take(8)
-      val (manifest, beforeM) = Exec.observed(spark.read.parquet(dir.toString),
+      val (manifest, beforeM) = Exec.observed(manifestRows,
         tag("compact"), Map("before" -> count(lit(1))))
       val live = manifest
         .join(actualDf, normFile === col("__live"), "left_semi")
-      // the staging write MATERIALIZES the filtered manifest before the
-      // source dir is touched — ordering is what makes this safe
+        .dropDuplicates("file")
       val (liveObserved, afterM) = Exec.observed(live, tag("compactL"),
         Map("after" -> count(lit(1))))
       liveObserved.coalesce(1)
@@ -1958,7 +1957,7 @@ final class Warehouse(val spark: SparkSession, val root: String) {
       // in which case the metric never lands and the observation is an
       // empty map — fall back to the counting job only on that rare path
       val before = beforeM().get("before").map(_.asInstanceOf[Long])
-        .getOrElse(spark.read.parquet(dir.toString).count())
+        .getOrElse(manifestRows.count())
       val after = afterM().get("after").map(_.asInstanceOf[Long])
         .getOrElse(live.count())
       if (after == 0) {
@@ -1970,16 +1969,13 @@ final class Warehouse(val spark: SparkSession, val root: String) {
         f.delete(dir, true)
         return (dir.toString, before, 0L)
       }
-      // rename the live dir ASIDE (not delete) before promoting staging:
-      // a crash between the two renames leaves the manifest recoverable
-      // in `_<key>.old` instead of permanently dropping pruning (readers
-      // degrade conservatively either way — hidden dirs are invisible);
-      // the next compaction or refresh garbage-collects the leftovers
-      require(f.rename(dir, aside),
-        s"compactSkippingManifests: rename $dir -> $aside failed")
-      require(f.rename(staging, dir),
-        s"compactSkippingManifests: rename $staging -> $dir failed")
-      f.delete(aside, true)
+      val fresh = java.util.UUID.randomUUID().toString.take(8)
+      listDataFiles(staging).foreach { st =>
+        moveStaged(st.getPath,
+          new Path(dir, s"compact-$fresh-${st.getPath.getName}"))
+      }
+      replaced.foreach(f.delete(_, false))
+      f.delete(staging, true)
       (dir.toString, before, after)
     }
     Seq("_zonemap", "_bloomindex").flatMap(manifestDirs(p, _)).map(compactDir)
@@ -2183,12 +2179,9 @@ final class Warehouse(val spark: SparkSession, val root: String) {
   }
 
   def viewSql(name: String): String = {
-    val p = viewPath(name)
-    val f = rawFs(p)
-    require(f.exists(p), s"no view named '$name'")
-    val in = f.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-    finally in.close()
+    val text = atomicRead(viewPath(name))
+    require(text.isDefined, s"no view named '$name'")
+    text.get.trim
   }
 
   def listViews(): Seq[String] = {
@@ -2388,14 +2381,20 @@ object AggSpec {
   }
 
   /** Re-combine partials (a combined row is itself a valid partial, so
-    * combine ∘ combine = combine — what makes compaction safe). */
+    * combine ∘ combine = combine — what makes compaction safe). Each
+    * output keeps its partial's type: a decimal `sum` would otherwise
+    * widen by 10 digits per combine, and a compacted snapshot would
+    * refuse the next stream run's partials. */
   private[engine] def combine(partials: DataFrame, keys: Seq[String],
                               specs: Seq[AggSpec]): DataFrame = {
-    val aggs = specs.map {
-      case AggSpec(out, "sum" | "count", _) => sum(col(out)).as(out)
-      case AggSpec(out, "min", _)           => min(col(out)).as(out)
-      case AggSpec(out, "max", _)           => max(col(out)).as(out)
-      case s => throw new IllegalArgumentException(s.toString)
+    val aggs = specs.map { s =>
+      val c = s.op match {
+        case "sum" | "count" => sum(col(s.out))
+        case "min"           => min(col(s.out))
+        case "max"           => max(col(s.out))
+        case _ => throw new IllegalArgumentException(s.toString)
+      }
+      c.cast(partials.schema(s.out).dataType).as(s.out)
     }
     partials.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
   }

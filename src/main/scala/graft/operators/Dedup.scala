@@ -212,42 +212,20 @@ object Dedup {
       Seq("id"), "left_anti")
   }
 
-  /** Republish `df` as `table`'s new version CARRYING the stream replay
-    * markers (`_stream_promoted`/`_stream_attempt`) into it as raw file
-    * copies — the [[graft.operators.IvfIndex.compact]] artifact-copy
-    * discipline. Every hygiene rewrite of a table that streaming sinks
-    * also land batches into MUST route through this: the markers live
-    * inside the version dir, so a bare republish would discard them and
-    * a micro-batch replayed after the rewrite (crash before its
-    * checkpoint committed) would re-promote into the fresh version —
-    * the table would see the batch twice, breaking the sinks'
-    * effectively-once contract. Partitioning is preserved. */
-  private def publishKeepingMarkers(wh: graft.engine.Warehouse,
-                                    df: DataFrame, table: String): Unit = {
-    val p = wh.dataPath(table) // resolved BEFORE the swap — the old dir
-    wh.publish(df, table, partitionCols = wh.partitioningOf(table),
-      beforeSwap = vdir =>
-        Seq("_stream_promoted", "_stream_attempt").foreach { m =>
-          val src = new org.apache.hadoop.fs.Path(s"$p/$m")
-          if (fsOf(wh, src).exists(src))
-            org.apache.hadoop.fs.FileUtil.copy(fsOf(wh, src), src,
-              fsOf(wh, src), new org.apache.hadoop.fs.Path(s"$vdir/$m"),
-              false, wh.spark.sessionState.newHadoopConf())
-        })
-    ()
-  }
-
   /** Apply accumulated replacements physically: republish the signature
     * table as its live rows only (one atomic versioned publish — the
-    * fresh version carries no `_replaced` companion, and any stream
-    * replay markers ride into it so a replayed batch still lands
+    * fresh version carries no `_replaced` companion; the stream replay
+    * markers live at the table root, so a replayed batch still lands
     * nothing twice). Table-sized I/O, the same cost class as the band
     * join every admission batch already pays over this table; run it
     * when the replaced set's anti-join side has grown past comfort —
     * or let [[maintainSigs]] decide. */
   def compactSigs(wh: graft.engine.Warehouse,
-                  sigTable: String = "corpus_sigs"): Unit =
-    publishKeepingMarkers(wh, liveSignatures(wh, sigTable), sigTable)
+                  sigTable: String = "corpus_sigs"): Unit = {
+    wh.publish(liveSignatures(wh, sigTable), sigTable,
+      wh.partitioningOf(sigTable))
+    ()
+  }
 
   /** Replaced-fraction gate for signature-table compaction: a rewrite
     * is earned when at least this fraction of the table's rows are
@@ -521,14 +499,11 @@ object Dedup {
               IndexAdvice.Compact) {
           // corpus first: its live-id semi-join reads the replaced
           // set through liveSignatures; once compactSigs clears the
-          // companion the same read would already BE live-only. Both
-          // rewrites carry the stream replay markers into the fresh
-          // version — a batch replayed after this pass must still
-          // read as already-landed
-          publishKeepingMarkers(wh,
+          // companion the same read would already BE live-only
+          wh.publish(
             wh.read(corpusTable).join(liveSignatures(wh, sigTable)
               .select(col("id").as(idCol)), Seq(idCol), "left_semi"),
-            corpusTable)
+            corpusTable, wh.partitioningOf(corpusTable))
           compactSigs(wh, sigTable)
         }
         ()
@@ -1119,17 +1094,19 @@ object Dedup {
     * every row whose id is no longer LIVE in the index (replaced
     * incumbents accrete as stale-score rerank rows — harmless for
     * serving, wrong the moment anything trusts their scores). One
-    * atomic versioned republish carrying any stream replay markers
-    * (the sinks land batches into this table — a marker-less rewrite
-    * would let a replayed batch double-land); afterwards the corpus
-    * table's ids are exactly [[IvfIndex.liveIds]]. Corpus-table-sized
-    * I/O — schedule it like a compaction, not per batch. */
+    * atomic versioned republish (the stream replay markers the sinks
+    * write live at the table root, so they survive it); afterwards the
+    * corpus table's ids are exactly [[IvfIndex.liveIds]].
+    * Corpus-table-sized I/O — schedule it like a compaction, not per
+    * batch. */
   def compactCorpus(wh: graft.engine.Warehouse, corpusTable: String,
-                    idCol: String, name: String = "ivfpq_index"): Unit =
-    publishKeepingMarkers(wh,
+                    idCol: String, name: String = "ivfpq_index"): Unit = {
+    wh.publish(
       wh.read(corpusTable).join(
         IvfIndex.liveIds(wh, name).select(col("id").as(idCol)),
-        Seq(idCol), "left_semi"), corpusTable)
+        Seq(idCol), "left_semi"), corpusTable, wh.partitioningOf(corpusTable))
+    ()
+  }
 
   /** Continuous ADMISSION: an arrival stream becomes the deduplicated
     * corpus batch by batch — [[semDedupAdmit]] as a self-maintaining

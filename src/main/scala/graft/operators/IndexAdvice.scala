@@ -81,10 +81,12 @@ object IndexAdvice {
     * file count and bytes, split into data files (postings / coded
     * entries), the `_deletes` tombstone companion, and everything else
     * (doclen, centroids, codebooks, manifests). The stored health row
-    * (`_health`, excluded here so writing it never moves its own census)
-    * is stamped with (nFiles, totalBytes, maxMtime) and withdrawn the
-    * moment any file changes — the same freshness discipline as the
-    * sketch-stats catalog, so advice can never be served from
+    * (`_health`, excluded here by prefix together with the
+    * `_health.<rand>.tmp` of a write in flight or cut by a crash, so
+    * writing it never moves its own census) is stamped with (nFiles,
+    * totalBytes, maxMtime) and withdrawn the moment any file changes —
+    * the same freshness discipline as the sketch-stats catalog, so
+    * advice can never be served from
     * pre-maintenance evidence. `maxMtime` (the newest file's
     * modification time) closes the byte-alias hole a two-field stamp
     * left open: a foreign rewrite that lands the identical file count
@@ -140,46 +142,41 @@ object IndexAdvice {
   private[operators] def companionShards(n: Long): Int =
     if (n <= 50000L) 1 else math.max(2L, n / 500000L + 1L).toInt
 
-  /** Write a metadata-scale sidecar (health evidence, layout markers)
-    * as ONE driver-written file — no Spark job, no commit protocol, no
-    * task scheduling. The maintenance composites are fixed-overhead
-    * bound (q204: 122 jobs for milliseconds of real work), and every
-    * health fold previously paid TWO coalesce(1) parquet write jobs;
-    * a bounded ≤nlist-row evidence table does not need an executor.
-    * Crash discipline: write `<path>.tmp`, then rename over the target
-    * (delete-first when present) — a crash between the steps leaves the
-    * old file or none, both of which read as stale/absent and trigger
-    * the bounded re-measure, never wrong evidence. */
+  /** Write a metadata-scale sidecar (health evidence) as ONE
+    * driver-written file — no Spark job, no commit protocol, no task
+    * scheduling. The maintenance composites are fixed-overhead bound
+    * (q204: 122 jobs for milliseconds of real work), and every health
+    * fold previously paid TWO coalesce(1) parquet write jobs; a bounded
+    * ≤nlist-row evidence table does not need an executor. Written
+    * through [[Warehouse.atomicWrite]]: a crash leaves the old sidecar
+    * whole beside a hidden `_health.<rand>.tmp` (which [[census]] skips
+    * with the sidecar), so readers see old evidence — stale by its
+    * stamp, so re-measured — or new, never a torn file. */
   private[operators] def writeSidecar(wh: Warehouse, path: String,
-                                      body: String): Unit = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(wh.spark.sessionState.newHadoopConf())
-    val tmp = new Path(path + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    if (fs.exists(p)) fs.delete(p, true)
-    if (!fs.rename(tmp, p))
-      throw new java.io.IOException(s"sidecar rename failed: $tmp -> $p")
-  }
+                                      body: String): Unit =
+    wh.atomicWrite(new Path(path), body)
 
-  /** Read a sidecar written by [[writeSidecar]]; None when absent. */
+  /** Read a sidecar written by [[writeSidecar]]; None when absent. Raw
+    * (checksum-free) like the write, so a stale `.crc` an older
+    * checksummed writer left beside it can never fail the read. */
   private[operators] def readSidecar(wh: Warehouse,
-                                     path: String): Option[String] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(wh.spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) None
-    else {
-      val st = fs.getFileStatus(p)
-      if (st.isDirectory) None
-      else {
-        val buf = new Array[Byte](st.getLen.toInt)
-        val in = fs.open(p)
-        try in.readFully(0L, buf) finally in.close()
-        Some(new String(buf, java.nio.charset.StandardCharsets.UTF_8))
-      }
+                                     path: String): Option[String] =
+    wh.atomicRead(new Path(path))
+
+  /** Copy the immutable artifacts `names` (files or dirs, absent ones
+    * skipped) of version dir `from` into the unswapped version dir `to`
+    * — a raw FILE copy, not a Spark read/write round-trip, so carrying a
+    * frozen layout (IVF centroids, codebooks, rotation; the text
+    * `_layout` marker) across a compaction costs zero jobs. */
+  private[operators] def copyForward(wh: Warehouse, from: String, to: String,
+                                     names: Seq[String]): Unit =
+    names.foreach { n =>
+      val src = new Path(s"$from/$n")
+      val fs = src.getFileSystem(wh.spark.sessionState.newHadoopConf())
+      if (fs.exists(src))
+        org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, new Path(s"$to/$n"),
+          false, wh.spark.sessionState.newHadoopConf())
     }
-  }
 
   private[operators] def census(wh: Warehouse, name: String): Census = {
     val base = new Path(wh.dataPath(name))

@@ -254,17 +254,8 @@ object IvfIndex extends IndexAdvice.Tombstoned[IvfHealth]("id") {
       .withColumn("seq", lit(0L))
       .repartition(IndexAdvice.shufflePartitions(wh), col("cell"))
     val out = wh.publish(live, name, partitionCols = Seq("cell"),
-      beforeSwap = newVdir =>
-        Seq("_centroids", "_codebooks", "_rotation").foreach { art =>
-          val src = new org.apache.hadoop.fs.Path(s"$vdir/$art")
-          // raw FILE copy, not a Spark read/write round-trip: the
-          // artifacts are immutable parquet dirs, so byte-identical
-          // copies cost zero jobs on the maintenance path
-          if (fs(wh, src).exists(src))
-            org.apache.hadoop.fs.FileUtil.copy(fs(wh, src), src,
-              fs(wh, src), new org.apache.hadoop.fs.Path(s"$newVdir/$art"),
-              false, wh.spark.sessionState.newHadoopConf())
-        })
+      beforeSwap = IndexAdvice.copyForward(wh, vdir, _,
+        Seq("_centroids", "_codebooks", "_rotation")))
     pre.foreach(e => persistHealth(wh, name,
       IvfHealth(e.cells.collect { case (cl, l, _) if l > 0L => (cl, l, 0L) },
         nlistOf(wh, name)), IndexAdvice.census(wh, name)))

@@ -440,13 +440,7 @@ object TextIndex extends IndexAdvice.Tombstoned[TextHealth]("doc_id") {
       live.repartition(IndexAdvice.shufflePartitions(wh), col("bucket")), name,
       partitionCols = Seq("bucket"),
       beforeSwap = vdir => {
-        val lp = new Path(s"${wh.dataPath(name)}/_layout")
-        // raw file copy — the marker is immutable, a Spark round-trip
-        // per compaction was pure job-count overhead
-        if (fs(wh, lp).exists(lp))
-          org.apache.hadoop.fs.FileUtil.copy(fs(wh, lp), lp, fs(wh, lp),
-            new Path(s"$vdir/_layout"), false,
-            wh.spark.sessionState.newHadoopConf())
+        IndexAdvice.copyForward(wh, wh.dataPath(name), vdir, Seq("_layout"))
         dl.repartition(IndexAdvice.companionShards(nDl))
           .write.parquet(s"$vdir/_doclen")
       })

@@ -173,22 +173,6 @@ class IngestSpec extends SparkSpec {
     assert(checkConstraints(clean, rules).collect().forall(_.getBoolean(3)))
   }
 
-  test("publishChecked: violations block the publish, clean data lands") {
-    import Validation._
-    val root = Files.createTempDirectory("whc").toString
-    val wh = new Warehouse(spark, root)
-    val rules = Seq(NotNull("flag"), Unique(Seq("k")))
-    val dirty = Seq((1L, "A"), (1L, null.asInstanceOf[String]))
-      .toDF("k", "flag")
-    val blocked = publishChecked(wh, dirty, "t", rules)
-    assert(blocked == Left(Seq(("not_null(flag)", 1L), ("unique(k)", 1L))))
-    assert(!wh.listTables().contains("t")) // nothing written
-    val clean = Seq((1L, "A"), (2L, "B")).toDF("k", "flag")
-    val ok = publishChecked(wh, clean, "t", rules)
-    assert(ok.isRight)
-    assert(wh.read("t").count() == 2)
-  }
-
   test("charset fallback: clean utf-8 kept, invalid utf-8 re-read as latin-1") {
     val root = Files.createTempDirectory("whenc").toString
     val wh = new Warehouse(spark, root)

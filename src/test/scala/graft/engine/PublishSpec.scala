@@ -735,6 +735,21 @@ class PublishSpec extends SparkSpec {
       Seq(("a", 3.75)))
   }
 
+  test("maintainAggregate: compactAggregate keeps the partial schema") {
+    val wh = new Warehouse(spark, freshRoot)
+    val dec = Seq(AggSpec("s", "sum", "v"))
+    val partial = AggSpec.partial(
+      Seq(("a", "1.50")).toDF("k", "v").selectExpr("k",
+        "CAST(v AS DECIMAL(10,2)) AS v"), Seq("k"), dec)
+    wh.appendStreamBatch(partial, "agg", 0L)
+    // combine ∘ combine keeps the partial schema, so a restarted stream's
+    // partials pass the landing schema gate
+    wh.compactAggregate("agg", Seq("k"), dec)
+    assert(wh.read("agg").schema == partial.schema)
+    wh.compactAggregate("agg", Seq("k"), dec)
+    assert(wh.read("agg").schema == partial.schema)
+  }
+
   test("maintainAggregate validates specs loudly") {
     intercept[IllegalArgumentException] {
       AggSpec.validate(Seq(AggSpec("x", "median", "v")), Seq("k"))
@@ -785,11 +800,13 @@ class PublishSpec extends SparkSpec {
     val entries = new java.io.File(s"${wh.root}/t").listFiles()
       .map(_.getName).toSet
     assert(entries.contains("_stream_promoted"), entries.toString)
-    // grace 0 = trust keep alone: now the sweep is total
+    // grace 0 = trust keep alone: now the sweep is total, except for the
+    // table state every version shares — the manifest and the markers
     wh.vacuum("t", keep = 1)
     val after = new java.io.File(s"${wh.root}/t").listFiles()
       .map(_.getName).toSet
-    assert(after == Set("_versions", "_current"), after.toString)
+    assert(after == Set("_versions", "_current", "_stream_promoted"),
+      after.toString)
   }
 
   test("restore preserves the table's partitioned layout and pruning") {

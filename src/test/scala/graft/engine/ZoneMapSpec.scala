@@ -239,35 +239,52 @@ class ZoneMapSpec extends SparkSpec {
       wh.read("t").filter(col("k") === 150L).count())
   }
 
-  test("compaction crash leftovers: refresh restores a lost-live-dir " +
-      "manifest from its .old aside and GCs stale staging dirs") {
+  test("manifest compaction crash leftovers never change answers") {
     val wh = new Warehouse(spark, freshRoot)
     clustered(wh)
     wh.buildZoneMap("t", Seq("k"))
+    wh.buildBloomIndex("t", "k", expectedItemsPerFile = 1L << 12)
     val p = new org.apache.hadoop.fs.Path(wh.dataPath("t"))
-    val f = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val live = new org.apache.hadoop.fs.Path(p, "_zonemap/k")
-    val aside = new org.apache.hadoop.fs.Path(p, "_zonemap/_k.old")
-    val tmp = new org.apache.hadoop.fs.Path(p, "_zonemap/_k.compact.tmp")
-    // simulate the crash window: live dir renamed aside, promotion never
-    // happened, plus a stale staging dir from an earlier attempt
-    require(f.rename(live, aside))
-    f.mkdirs(tmp)
-    // readers degrade conservatively meanwhile (no manifest -> full scan)
-    assert(wh.zonePrunedFiles("t", "k", 1L, 10L).isEmpty)
-    wh.refreshSkippingIndexes("t")
-    assert(f.exists(live), "refresh must restore the manifest from .old")
-    assert(!f.exists(aside) && !f.exists(tmp), "leftovers must be GC'd")
-    assert(wh.readZonePruned("t", "k", 100L, 300L).count() ==
-      wh.read("t").filter(col("k").between(100L, 300L)).count())
-    // a COMPLETED compaction's leftover aside (crash after promote,
-    // before the aside delete) is garbage once a live dir exists
-    require(f.rename(live, aside))
-    f.mkdirs(live) // placeholder "promoted" dir must win over the aside
-    f.delete(live, true)
-    require(f.rename(aside, live)) // restore for the real compaction
-    wh.compactSkippingManifests("t")
-    assert(f.exists(live) && !f.exists(aside) && !f.exists(tmp))
+    val conf = spark.sessionState.newHadoopConf()
+    val f = p.getFileSystem(conf)
+    val manifests = Seq("_zonemap/k", "_bloomindex/k")
+      .map(new org.apache.hadoop.fs.Path(p, _))
+    def staging(m: org.apache.hadoop.fs.Path) =
+      new org.apache.hadoop.fs.Path(m.getParent, s"_${m.getName}.compact.tmp")
+    def parts(m: org.apache.hadoop.fs.Path) = f.listStatus(m).map(_.getPath)
+      .filter(_.getName.endsWith(".parquet")).toSeq
+    def answersHold(): Unit = {
+      assert(wh.readZonePruned("t", "k", 100L, 300L).collect().toSet ==
+        wh.read("t").filter(col("k").between(100L, 300L)).collect().toSet)
+      assert(wh.readBloomPruned("t", "k", Seq(150L, 7001L)).collect().toSet ==
+        wh.read("t").filter(col("k").isin(150L, 7001L)).collect().toSet)
+    }
+    // a crash before the move: the staged rewrite is left beside the live
+    // manifest (a copy of it stands in for the rewrite)
+    manifests.foreach(m => org.apache.hadoop.fs.FileUtil.copy(f, m, f,
+      staging(m), false, conf))
+    answersHold()
+    // a crash after the move, before the replaced files are deleted: the
+    // compacted file sits beside them, so every file has two rows
+    manifests.foreach(m => parts(m).foreach(pp =>
+      org.apache.hadoop.fs.FileUtil.copy(f, pp, f,
+        new org.apache.hadoop.fs.Path(m, s"compact-crash-${pp.getName}"),
+        false, conf)))
+    assert(spark.read.parquet(manifests.head.toString).count() == 16L)
+    answersHold()
+    val report = wh.compactSkippingManifests("t")
+    assert(report.size == 2, report.toString)
+    report.foreach { case (dir, before, after) =>
+      assert(before == 16L && after == 8L, s"$dir: $before -> $after")
+    }
+    manifests.foreach { m =>
+      assert(parts(m).size == 1, parts(m).toString)
+      val rows = spark.read.parquet(m.toString)
+      assert(rows.count() == 8L && rows.select("file").distinct().count() == 8L)
+      assert(!f.exists(staging(m)), s"${staging(m)} left behind")
+    }
+    answersHold()
+    assert(wh.zonePrunedFiles("t", "k", 1L, 10L).get._2.isEmpty)
   }
 
   test("buildZoneMap refuses a column name containing '__' (the manifest " +

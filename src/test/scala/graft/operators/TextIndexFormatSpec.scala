@@ -75,6 +75,48 @@ class TextIndexFormatSpec extends SparkSpec {
       r.getAs[Long]("dead_rows") == 1L)
   }
 
+  test("a crash-left sidecar tmp and a stale .crc never fail a read") {
+    val wh = freshWh
+    build(wh, "tfmt4")
+    val analyzed = TextIndex.analyzeHealth(wh, "tfmt4").collect().toSeq
+    val dir = new org.apache.hadoop.fs.Path(wh.dataPath("tfmt4"))
+    val path = new org.apache.hadoop.fs.Path(dir, "_health")
+    val body = IndexAdvice.readSidecar(wh, path.toString).get
+    val conf = spark.sessionState.newHadoopConf()
+    // an older checksummed writer's sidecar: `_health` plus `._health.crc`
+    val checked = new org.apache.hadoop.fs.LocalFileSystem()
+    checked.initialize(java.net.URI.create("file:///"), conf)
+    val out = checked.create(path, true)
+    try out.write("v=3\nstale\n".getBytes("UTF-8")) finally out.close()
+    assert(checked.exists(new org.apache.hadoop.fs.Path(dir, "._health.crc")))
+    // rewritten since through writeSidecar: the `.crc` now disagrees
+    IndexAdvice.writeSidecar(wh, path.toString, body)
+    intercept[org.apache.hadoop.fs.ChecksumException] {
+      val in = checked.open(path)
+      try in.readFully(0L, new Array[Byte](body.length)) finally in.close()
+    }
+    // a write that died before its rename leaves a torn tmp beside it,
+    // which the census skips with the sidecar
+    val c0 = IndexAdvice.census(wh, "tfmt4")
+    Files.write(java.nio.file.Paths.get(dir.toUri.getPath, "_health.7.tmp"),
+      body.take(9).getBytes("UTF-8"))
+    assert(IndexAdvice.census(wh, "tfmt4") == c0)
+    assert(IndexAdvice.readSidecar(wh, path.toString).contains(body))
+    // the same reads through a checksummed session filesystem: the last
+    // complete sidecar, stamp-fresh, no ChecksumException
+    spark.conf.set("fs.file.impl", classOf[org.apache.hadoop.fs.LocalFileSystem].getName)
+    spark.conf.set("fs.file.impl.disable.cache", "true")
+    try {
+      assert(IndexAdvice.readSidecar(wh, path.toString).contains(body))
+      TextIndex.forgetDriverState()
+      assert(TextIndex.readHealth(wh, "tfmt4").map(_.collect().toSeq)
+        .contains(analyzed))
+    } finally {
+      spark.conf.unset("fs.file.impl")
+      spark.conf.unset("fs.file.impl.disable.cache")
+    }
+  }
+
   test("_deletes keeps its (doc_id, cut) schema for delete and reindex") {
     val wh = freshWh
     build(wh, "tfmt3")
